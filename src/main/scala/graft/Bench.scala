@@ -206,20 +206,7 @@ object Bench {
     * production-shaped (thousands of rows per trigger) so per-micro-batch
     * fixed cost doesn't dominate the rows/s signal. */
   def streamThroughput(spark: SparkSession, files: Int = 8,
-                       eventsPerFile: Int = 50, rowsPerEvent: Int = 250): (Long, Double) =
-    streamRun(spark, files, eventsPerFile, rowsPerEvent, sink = true)
-
-  /** The same stream with a count-only applyBatch (no JDBC): isolates the
-    * parse/flatten/route/shuffle pipeline cost from the sink cost. */
-  def streamPipelineOnly(spark: SparkSession, files: Int = 8,
-                         eventsPerFile: Int = 50, rowsPerEvent: Int = 250): (Long, Double) =
-    streamRun(spark, files, eventsPerFile, rowsPerEvent, sink = false)
-
-  private val benchRunId = new java.util.concurrent.atomic.AtomicInteger()
-
-  private def streamRun(spark: SparkSession, files: Int,
-                        eventsPerFile: Int, rowsPerEvent: Int,
-                        sink: Boolean): (Long, Double) = {
+                       eventsPerFile: Int = 50, rowsPerEvent: Int = 250): (Long, Double) = {
     import graft.model.{DbMapping, MappingConfig}
     import graft.sink.{DeleteInsertDialect, SchemaProbe}
     import graft.streaming.CanalStream
@@ -256,15 +243,13 @@ object Bench {
       .option("maxFilesPerTrigger", "1") // one file per micro-batch
       .text(dir.toString)
     val t0 = System.nanoTime()
-    val apply: (MappingConfig, org.apache.spark.sql.DataFrame, CanalStream.SegmentCtx) => Unit =
-      if (sink)
-        (cfg, ordered, ctx) => CanalStream.applyBatchToJdbc(cfg, ordered, targetSchema,
-          conn, DeleteInsertDialect, sourceColsHint = ctx.sourceCols)
-      else
-        (_, ordered, _) => { ordered.count(); () }
-    val q = CanalStream.start(spark, raw, configs, numPartitions = 4, apply)
+    val q = CanalStream.start(spark, raw, configs, numPartitions = 4,
+      (cfg, ordered, ctx) => CanalStream.applyBatchToJdbc(cfg, ordered, targetSchema,
+        conn, DeleteInsertDialect, sourceColsHint = ctx.sourceCols))
     q.processAllAvailable()
     q.stop()
     (total, (System.nanoTime() - t0) / 1e9)
   }
+
+  private val benchRunId = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -36,6 +36,22 @@ import scala.collection.concurrent.TrieMap
  *    bumped when stored SEMANTICS change so old rounds' tables can't leak
  *    into new code.
  *
+ * Store lifecycle. Each store is declared once, as a [[StoreSpec]] (kind,
+ * config, input table, partition columns, base builder, read projection);
+ * everything else takes the spec:
+ *  1. base build — [[base]] writes the corpus-keyed entry once and reads
+ *     it back ever after;
+ *  2. head — absorb-able stores keep a `<kind>_p<pathFp>_head_<config>.json`
+ *     pointer listing the entries whose union is the current view
+ *     ([[current]]) and the exactly-once batch-id ledger;
+ *  3. absorb — [[absorb]] appends a batch's novel rows as a delta entry;
+ *  4. compact — [[compact]] folds base ∪ deltas into one entry, ledger kept;
+ *  5. gc — superseded generations and unreferenced deltas age out
+ *     ([[sweepSuperseded]], [[sweepUnreferenced]], [[gc]]).
+ * The IVF maintenance operators ([[appendIvfIndex]], [[splitIvfCells]],
+ * [[retrainIvfIndex]]) move the index, centroid and code heads through the
+ * same entry and head helpers.
+ *
  * The computation stays independently gated: LlmSpec re-derives pairs from
  * scratch and compares against the exact joins; MaterializedSpec proves the
  * write-once/read-many contract (a fresh consumer reuses the stored table
@@ -59,7 +75,7 @@ object Materialized {
     * (a second consumer must NOT increment it). */
   private[queries] val buildsStarted = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** Delta-publish count of [[absorbInto]], separate from [[buildsStarted]]
+  /** Delta-publish count of [[absorb]], separate from [[buildsStarted]]
     * so specs can prove an absorb never re-signs the corpus AND that
     * re-absorbing an already-absorbed batch publishes nothing. */
   private[graft] val absorbsPublished = new java.util.concurrent.atomic.AtomicInteger()
@@ -75,9 +91,11 @@ object Materialized {
     dfCache.clear(); statsCache.clear()
   }
 
-  private def storeRoot(spark: SparkSession): Path =
+  /** The current [[FormatVersion]]'s directory under the store root. */
+  private def storeDir(spark: SparkSession): Path =
     Paths.get(spark.conf.get("spark.graft.materialized.dir",
       Paths.get(sys.props("java.io.tmpdir"), "graft-materialized").toString))
+      .resolve(s"v$FormatVersion")
 
   private def md5Hex(s: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -225,7 +243,7 @@ object Materialized {
         // (absorb deltas / a compacted chain whose names embed the ledger
         // hash, never the corpus fingerprint) and must survive a base
         // rebuild; a stale head (other baseFp) protects nothing
-        val headRef = readHead(parent.resolve(s"${kind}_p${pfp}_head_$cfg.json"))
+        val headRef = readHead(parent.resolve(headName(kind, pfp, cfg)))
           .filter(_.baseFp == cfp).map(_.entries.toSet).getOrElse(Set.empty)
         val cutoff = System.currentTimeMillis() - gcAgeMs(spark)
         val s = Files.list(parent)
@@ -255,7 +273,7 @@ object Materialized {
    * alone.
    */
   def gc(spark: SparkSession, olderThanMs: Long = StaleTmpMs): Seq[Path] = {
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
+    val vdir = storeDir(spark)
     if (!Files.isDirectory(vdir)) return Nil
     val (entries, headRefs) = {
       val s = Files.list(vdir)
@@ -360,35 +378,87 @@ object Materialized {
     else df.hint("rebalance")
   }
 
-  /** Write-once / read-many parquet table: build + write on first use (per
-    * corpus fingerprint + config, atomic publish), read back everywhere
-    * else — including a fresh session after restart. `build`'s result is
-    * unpersisted after the write (no-op if it wasn't cached), so builders
-    * may hand back their eagerly-cached form. */
-  private def parquetBacked(spark: SparkSession, kind: String, config: String,
-                            sfDir: String, inputTable: String,
-                            partitionCols: Seq[String] = Nil)
-                           (build: => DataFrame): DataFrame = {
-    val dir = storeRoot(spark).resolve(s"v$FormatVersion")
-      .resolve(entryName(kind, sfDir, inputTable, config))
-    dfCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$dir", {
-      if (!Files.exists(dir.resolve("_SUCCESS"))) {
+  /** Write `df` as the store entry `name` — compacted, `partitionBy` the
+    * store's columns, staged in a `.tmp-` sibling and atomically published,
+    * then unpersisted (builders may hand back their eagerly-cached form).
+    * `df` is not evaluated when the entry is already committed. Returns
+    * whether this call wrote it. */
+  private def writeEntry(spark: SparkSession, name: String,
+                         partitionCols: Seq[String])(df: => DataFrame): Boolean = {
+    val dir = storeDir(spark).resolve(name)
+    val absent = !Files.exists(dir.resolve("_SUCCESS"))
+    if (absent) {
+      Files.createDirectories(dir.getParent)
+      sweepStaleTmp(dir)
+      val tmp = dir.getParent.resolve(
+        s"${dir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
+      val data = df
+      val w = compactOnWrite(data, partitionCols).write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(tmp.toString)
+      data.unpersist()
+      publish(tmp, dir)
+    }
+    absent
+  }
+
+  // ------------------------------------------------------------------
+  // Store descriptors
+  // ------------------------------------------------------------------
+
+  /** One materialized store, declared once: its `kind` and `config` (the
+    * entry-name components), the input `table` its fingerprints key on,
+    * the `partitionCols` every generation is written with, the `build` of
+    * its base entry from the corpus, and the `project`ion every read
+    * applies. [[base]], [[current]], [[absorb]] and [[compact]] take it. */
+  private[graft] final case class StoreSpec(kind: String, config: String, table: String,
+                                            partitionCols: Seq[String],
+                                            project: DataFrame => DataFrame,
+                                            build: (SparkSession, String) => DataFrame)
+
+  private object StoreSpec {
+    /** A store read back as written. */
+    def flat(kind: String, config: String, table: String, partitionCols: String*)
+            (build: (SparkSession, String) => DataFrame): StoreSpec =
+      StoreSpec(kind, config, table, partitionCols, identity, build)
+
+    /** An `embeddings` store partitioned by IVF cell: reads select `cols`
+      * in order and restore `centroid_id`'s build-time long type (the
+      * partition column round-trips through directory names as an int). */
+    def cells(kind: String, config: String, cols: String*)
+             (build: (SparkSession, String) => DataFrame): StoreSpec =
+      StoreSpec(kind, config, "embeddings", Seq("centroid_id"),
+        _.select(cols.map(c =>
+          if (c == "centroid_id") col(c).cast("long").as(c) else col(c)): _*),
+        build)
+  }
+
+  /** The base entry: keyed by the input table's current content. */
+  private def baseEntry(spec: StoreSpec, sfDir: String): String =
+    entryName(spec.kind, sfDir, spec.table, spec.config)
+
+  /** A generation derived from the base (absorb delta, compaction,
+    * maintenance): its fingerprint slot holds a hash of `seed`, so a
+    * retried writer resolves to the same name. */
+  private def derivedEntry(spec: StoreSpec, sfDir: String, seed: String): String =
+    s"${spec.kind}_p${pathFingerprint(sfDir, spec.table)}_${md5Hex(seed).take(16)}_${spec.config}"
+
+  /** The base generation, written once per (corpus, config) and read back
+    * everywhere else — including a fresh session after restart. */
+  private def base(spark: SparkSession, sfDir: String, spec: StoreSpec): DataFrame = {
+    val name = baseEntry(spec, sfDir)
+    val dir = storeDir(spark).resolve(name)
+    spec.project(dfCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$dir", {
+      if (writeEntry(spark, name, spec.partitionCols)(spec.build(spark, sfDir))) {
         buildsStarted.incrementAndGet()
-        Files.createDirectories(dir.getParent)
-        sweepStaleTmp(dir)
-        val tmp = dir.getParent.resolve(
-          s"${dir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-        val df = build
-        val w = compactOnWrite(df, partitionCols).write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(tmp.toString)
-        df.unpersist()
-        publish(tmp, dir)
         sweepSuperseded(spark, dir)
       }
       spark.read.parquet(dir.toString)
-    })
+    }))
   }
+
+  private def hasBase(spark: SparkSession, sfDir: String, spec: StoreSpec): Boolean =
+    Files.exists(storeDir(spark).resolve(baseEntry(spec, sfDir)).resolve("_SUCCESS"))
 
   // ------------------------------------------------------------------
   // Absorb-able stores: base + delta generations behind a head pointer
@@ -419,15 +489,17 @@ object Materialized {
     }
   }
 
-  /** Head pointer sidecar: `<kind>_p<pathFp>_head_<config>.json`. The
+  /** Head pointer sidecar name: `<kind>_p<pathFp>_head_<config>.json`. The
     * `head` token can never collide with a content fingerprint (not
     * 16-hex), so entry-name parsing ignores it. */
-  private def headFile(spark: SparkSession, kind: String, config: String,
-                       sfDir: String, table: String): Path =
-    storeRoot(spark).resolve(s"v$FormatVersion").resolve(
-      s"${kind}_p${pathFingerprint(sfDir, table)}_head_$config.json")
+  private def headName(kind: String, pathFp: String, config: String): String =
+    s"${kind}_p${pathFp}_head_$config.json"
 
-  /** Parse of [[headFile]] names — (kind, pathFp, config). */
+  private def headFile(spark: SparkSession, sfDir: String, spec: StoreSpec): Path =
+    storeDir(spark).resolve(
+      headName(spec.kind, pathFingerprint(sfDir, spec.table), spec.config))
+
+  /** Parse of [[headName]] — (kind, pathFp, config). */
   private val HeadFileName = """(.+)_p([0-9a-f]{8})_head_(.+)\.json""".r
 
   private def readHead(hf: Path): Option[StoreHead] =
@@ -437,21 +509,19 @@ object Materialized {
     * and every listed entry is a committed table. A lost/corrupt delta
     * degrades to the base build path — absorbed batches re-absorb safely
     * (exactly-once by batch id makes replay idempotent). */
-  private def liveHead(spark: SparkSession, kind: String, config: String,
-                       sfDir: String, table: String): Option[(StoreHead, Seq[Path])] =
-    liveHeadAt(spark, kind, config, sfDir, table, corpusFingerprint(sfDir, table))
+  private def liveHead(spark: SparkSession, sfDir: String,
+                       spec: StoreSpec): Option[(StoreHead, Seq[Path])] =
+    liveHeadAt(spark, sfDir, spec, corpusFingerprint(sfDir, spec.table))
 
   /** [[liveHead]] against a PRE-COMPUTED corpus fingerprint — the in-lock
     * resolution path: the fingerprint walk (every corpus file's tail) must
     * not run while the exclusive head lock blocks other writers. */
-  private def liveHeadAt(spark: SparkSession, kind: String, config: String,
-                         sfDir: String, table: String,
+  private def liveHeadAt(spark: SparkSession, sfDir: String, spec: StoreSpec,
                          baseFp: String): Option[(StoreHead, Seq[Path])] =
-    readHead(headFile(spark, kind, config, sfDir, table))
+    readHead(headFile(spark, sfDir, spec))
       .filter(_.baseFp == baseFp)
       .flatMap { h =>
-        val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-        val dirs = h.entries.map(vdir.resolve(_))
+        val dirs = h.entries.map(storeDir(spark).resolve(_))
         if (dirs.forall(d => Files.exists(d.resolve("_SUCCESS")))) Some((h, dirs))
         else None
       }
@@ -470,20 +540,22 @@ object Materialized {
     * this is the ONE point where the current corpus fingerprint is in
     * hand, so heads orphaned by a corpus regeneration die here and their
     * deltas become [[gc]]-able. */
-  private def headAware(spark: SparkSession, kind: String, config: String,
-                        sfDir: String, table: String,
-                        partitionCols: Seq[String] = Nil)
-                       (buildBase: => DataFrame): DataFrame =
-    liveHead(spark, kind, config, sfDir, table) match {
-      case Some((_, dirs)) => readView(spark, dirs)
+  private def current(spark: SparkSession, sfDir: String, spec: StoreSpec): DataFrame =
+    liveHead(spark, sfDir, spec) match {
+      case Some((_, dirs)) => spec.project(readView(spark, dirs))
       case None =>
-        val df = parquetBacked(spark, kind, config, sfDir, table,
-          partitionCols)(buildBase)
-        val hf = headFile(spark, kind, config, sfDir, table)
-        if (readHead(hf).exists(_.baseFp != corpusFingerprint(sfDir, table)))
+        val df = base(spark, sfDir, spec)
+        val hf = headFile(spark, sfDir, spec)
+        if (readHead(hf).exists(_.baseFp != corpusFingerprint(sfDir, spec.table)))
           Files.deleteIfExists(hf)
         df
     }
+
+  /** Is a committed artifact (base entry or live head) available for this
+    * store WITHOUT triggering a build? The dispatch probe of
+    * [[knnJoinAuto]]. */
+  private def artifactAvailable(spark: SparkSession, sfDir: String, spec: StoreSpec): Boolean =
+    hasBase(spark, sfDir, spec) || liveHead(spark, sfDir, spec).isDefined
 
   /** Atomically (re)write a small sidecar file. */
   private def replaceFile(dest: Path, content: String): Unit = {
@@ -498,12 +570,12 @@ object Materialized {
   /** Entries of (kind, pathFp, config) that the new head no longer
     * references — a superseded absorb chain (or a base generation the
     * corpus regenerated away) — deleted past the age gate. */
-  private def sweepUnreferenced(spark: SparkSession, kind: String, config: String,
-                                sfDir: String, table: String,
+  private def sweepUnreferenced(spark: SparkSession, sfDir: String, spec: StoreSpec,
                                 head: StoreHead): Unit = {
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
+    val vdir = storeDir(spark)
     if (!Files.isDirectory(vdir)) return
-    val pfp = pathFingerprint(sfDir, table)
+    val (kind, config) = (spec.kind, spec.config)
+    val pfp = pathFingerprint(sfDir, spec.table)
     val keep = head.entries.toSet
     val cutoff = System.currentTimeMillis() - gcAgeMs(spark)
     val s = Files.list(vdir)
@@ -521,25 +593,6 @@ object Materialized {
     } finally s.close()
   }
 
-  /**
-   * Absorb a judged batch's kept signature rows into an absorb-able store:
-   * the continuous-ingestion write path. The corpus base table is built
-   * (once, ever) if absent; the batch's NOVEL rows — ids not already in
-   * the current view — are written as a small DELTA entry (batch-sized,
-   * never a rewrite of the corpus artifact); the head pointer then
-   * atomically advances to `entries :+ delta`, so a day-3 batch is judged
-   * against corpus ∪ kept(day 1) ∪ kept(day 2). Absorption is
-   * exactly-once per `batchId`: re-absorbing an absorbed id is a no-op
-   * (idempotent replay after a crashed writer), and the delta entry name
-   * chains `baseFp` with the absorbed-id ledger, so a half-published
-   * retry resolves to the same entry and the atomic publish dedupes.
-   *
-   * 100 TB shape: the store grows by one batch-sized delta per absorb;
-   * reads union base + deltas (compaction = absorb-all into a fresh base,
-   * out of scope here). The novelty anti-join ships only the store's id
-   * column — 8 bytes/doc — against the (small) batch side; in production
-   * ids are globally unique and it degenerates to a no-match pass.
-   */
   /** Per-lock-file JVM-local monitors: `FileChannel.lock` throws
     * `OverlappingFileLockException` (it does not block) when another
     * THREAD of the same JVM holds the lock — exactly the
@@ -565,21 +618,36 @@ object Materialized {
     }
   }
 
-  private def absorbInto(spark: SparkSession, kind: String, config: String,
-                         sfDir: String, table: String, keptRows: DataFrame,
-                         batchId: String, partitionCols: Seq[String] = Nil)
-                        (buildBase: => DataFrame): DataFrame = {
+  /**
+   * Absorb a judged batch's kept rows (already in the store's row schema,
+   * keyed by `id`) into an absorb-able store: the continuous-ingestion
+   * write path. The corpus base table is built (once, ever) if absent; the
+   * batch's NOVEL rows — ids not already in the current view — are written
+   * as a small DELTA entry (batch-sized, never a rewrite of the corpus
+   * artifact); the head pointer then atomically advances to
+   * `entries :+ delta`, so a day-3 batch is judged against
+   * corpus ∪ kept(day 1) ∪ kept(day 2). Absorption is exactly-once per
+   * `batchId`: re-absorbing an absorbed id is a no-op (idempotent replay
+   * after a crashed writer), and the delta entry name chains `baseFp` with
+   * the absorbed-id ledger, so a half-published retry resolves to the same
+   * entry and the atomic publish dedupes. Returns the current view.
+   *
+   * 100 TB shape: the store grows by one batch-sized delta per absorb;
+   * reads union base + deltas until [[compact]] folds them. The novelty
+   * anti-join ships only the store's id column — 8 bytes/doc — against the
+   * (small) batch side; in production ids are globally unique and it
+   * degenerates to a no-match pass.
+   */
+  private[graft] def absorb(spark: SparkSession, sfDir: String, spec: StoreSpec,
+                            rows: DataFrame, batchId: String): DataFrame = {
     require(batchId.matches("[A-Za-z0-9_.-]+"),
       s"batchId must be [A-Za-z0-9_.-]+ (it is stored in the head ledger): $batchId")
-    val baseFp = corpusFingerprint(sfDir, table)
-    val pfp = pathFingerprint(sfDir, table)
-    val baseName = s"${kind}_p${pfp}_${baseFp}_$config"
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
+    val baseFp = corpusFingerprint(sfDir, spec.table)
     // guarantees the base entry exists (built at most once) and clears any
     // head orphaned by a corpus regeneration — OUTSIDE the lock: the base
     // build is the expensive corpus signing, and its publish is idempotent
-    headAware(spark, kind, config, sfDir, table, partitionCols)(buildBase)
-    val hf = headFile(spark, kind, config, sfDir, table)
+    current(spark, sfDir, spec)
+    val hf = headFile(spark, sfDir, spec)
     withHeadLock(hf) {
       // resolve the head through liveHead, NOT a raw read: a head whose
       // entries were lost is broken — trusting its ledger would make the
@@ -587,8 +655,10 @@ object Materialized {
       // recover the lost rows. A broken head restarts the chain from the
       // base (batch ids become re-absorbable, which is safe: their rows
       // are gone from the view, so the anti-join re-admits them).
-      val (head0, dirs0) = liveHeadAt(spark, kind, config, sfDir, table, baseFp)
-        .getOrElse((StoreHead(baseFp, Nil, Seq(baseName)), Seq(vdir.resolve(baseName))))
+      val (head0, dirs0) = liveHeadAt(spark, sfDir, spec, baseFp).getOrElse {
+        val b = baseEntry(spec, sfDir)
+        (StoreHead(baseFp, Nil, Seq(b)), Seq(storeDir(spark).resolve(b)))
+      }
       if (!head0.absorbed.contains(batchId)) { // exactly-once
         val absorbed1 = head0.absorbed :+ batchId
         // the novelty view MUST resolve inside the lock, from head0's own
@@ -596,147 +666,136 @@ object Materialized {
         // visible to the anti-join, or an id shared between racing batches
         // is written twice. Persisted because both the isEmpty probe and
         // the delta write consume it — unpersisted before returning.
-        val current = readView(spark, dirs0)
-        val novel = keptRows.join(current.select("id"), Seq("id"), "left_anti")
+        val novel = rows.join(readView(spark, dirs0).select("id"), Seq("id"), "left_anti")
           .persist()
         try {
-          val head1 = if (novel.isEmpty) {
+          val entries1 = if (novel.isEmpty) {
             // nothing novel: record the batch id in the ledger with NO entry —
             // a partitioned write of an empty frame leaves a directory with no
             // readable footer, which would poison every later head read
-            StoreHead(baseFp, absorbed1, head0.entries)
+            head0.entries
           } else {
-            val deltaName = s"${kind}_p${pfp}_" +
-              s"${md5Hex(s"$baseFp:${absorbed1.mkString(",")}").take(16)}_$config"
-            val deltaDir = vdir.resolve(deltaName)
-            if (!Files.exists(deltaDir.resolve("_SUCCESS"))) {
+            val delta = derivedEntry(spec, sfDir, s"$baseFp:${absorbed1.mkString(",")}")
+            if (writeEntry(spark, delta, spec.partitionCols)(novel))
               absorbsPublished.incrementAndGet()
-              Files.createDirectories(deltaDir.getParent)
-              sweepStaleTmp(deltaDir)
-              val tmp = deltaDir.getParent.resolve(
-                s"${deltaDir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-              val w = compactOnWrite(novel, partitionCols).write.mode("overwrite")
-              (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-                .parquet(tmp.toString)
-              publish(tmp, deltaDir)
-            }
-            StoreHead(baseFp, absorbed1, head0.entries :+ deltaName)
+            head0.entries :+ delta
           }
+          val head1 = StoreHead(baseFp, absorbed1, entries1)
           replaceFile(hf, renderHead(head1))
-          sweepUnreferenced(spark, kind, config, sfDir, table, head1)
+          sweepUnreferenced(spark, sfDir, spec, head1)
         } finally novel.unpersist()
       }
     }
-    headAware(spark, kind, config, sfDir, table, partitionCols)(buildBase)
+    current(spark, sfDir, spec)
+  }
+
+  /** Append `entry` to the store's head under its lock — a missing or
+    * broken head starts from the base entry; no-op when already listed,
+    * so a resumed maintenance run is idempotent. The ledger is kept. */
+  private def appendToHead(spark: SparkSession, sfDir: String, spec: StoreSpec,
+                           baseFp: String, entry: String): Unit = {
+    val hf = headFile(spark, sfDir, spec)
+    withHeadLock(hf) {
+      val h0 = liveHeadAt(spark, sfDir, spec, baseFp).map(_._1)
+        .getOrElse(StoreHead(baseFp, Nil, Seq(baseEntry(spec, sfDir))))
+      if (!h0.entries.contains(entry))
+        replaceFile(hf, renderHead(h0.copy(entries = h0.entries :+ entry)))
+    }
   }
 
   /**
    * Compact an absorb-able store: rewrite the current view (base ∪ all
-   * deltas) as ONE fresh entry and point the head at it, preserving the
-   * absorbed-batch ledger — batch ids stay exactly-once across the
-   * compaction, and nothing is re-signed/re-assigned (rows are copied,
-   * not recomputed). Bounds the read amplification of a long absorb
-   * chain: after N days of daily batches a reader unions N+1 entries;
-   * compaction resets that to 1. The superseded base + deltas age out
-   * via [[sweepUnreferenced]]/[[gc]]. No-op when the head has no deltas.
+   * deltas) as ONE fresh entry — with the store's own partition layout, so
+   * partition pruning holds across the fold exactly as it holds across
+   * deltas — and point the head at it, preserving the absorbed-batch
+   * ledger: batch ids stay exactly-once across the compaction, and
+   * nothing is re-signed/re-assigned (rows are copied, not recomputed).
+   * Bounds the read amplification of a long absorb chain: after N days of
+   * daily batches a reader unions N+1 entries; compaction resets that to
+   * 1. The superseded base + deltas age out via [[sweepUnreferenced]] /
+   * [[gc]]. No-op when the head has no deltas. Returns the current view.
    */
-  private def compactStore(spark: SparkSession, kind: String, config: String,
-                           sfDir: String, table: String,
-                           partitionCols: Seq[String] = Nil)
-                          (buildBase: => DataFrame): DataFrame = {
-    val current = headAware(spark, kind, config, sfDir, table, partitionCols)(buildBase)
-    val hf = headFile(spark, kind, config, sfDir, table)
-    val baseFp = corpusFingerprint(sfDir, table)
+  private[graft] def compact(spark: SparkSession, sfDir: String, spec: StoreSpec): DataFrame = {
+    val view = current(spark, sfDir, spec)
+    val baseFp = corpusFingerprint(sfDir, spec.table)
     // resolve through liveHead, NOT a raw head read: a BROKEN head (lost
     // delta) must never be compacted — the degraded view would be
     // installed as the single entry while the ledger still lists the lost
     // batches, permanently swallowing the re-absorbs that recover them
-    liveHeadAt(spark, kind, config, sfDir, table, baseFp) match {
+    liveHeadAt(spark, sfDir, spec, baseFp) match {
       case Some((h, dirs)) if h.entries.size > 1 =>
-        val snapshot = readView(spark, dirs)
-        val name = s"${kind}_p${pathFingerprint(sfDir, table)}_" +
-          s"${md5Hex(s"$baseFp:compact:${h.absorbed.mkString(",")}").take(16)}_$config"
-        val dir = storeRoot(spark).resolve(s"v$FormatVersion").resolve(name)
+        val name = derivedEntry(spec, sfDir, s"$baseFp:compact:${h.absorbed.mkString(",")}")
         // the rewrite (the expensive step) runs OUTSIDE the lock, from the
         // snapshot's own entry list — concurrent absorbers are not blocked
-        if (!Files.exists(dir.resolve("_SUCCESS"))) {
-          Files.createDirectories(dir.getParent)
-          sweepStaleTmp(dir)
-          val tmp = dir.getParent.resolve(
-            s"${dir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-          val w = compactOnWrite(snapshot, partitionCols).write.mode("overwrite")
-          (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-            .parquet(tmp.toString)
-          publish(tmp, dir)
-        }
+        writeEntry(spark, name, spec.partitionCols)(readView(spark, dirs))
         val h1 = StoreHead(baseFp, h.absorbed, Seq(name))
         // install iff the head is UNCHANGED since the snapshot (a CAS): a
         // delta published by a concurrent absorber after our snapshot must
         // not be dropped from the view. On a lost race the compacted entry
         // is simply unreferenced (ages out via the sweeps) and the caller
         // may re-compact against the longer chain.
+        val hf = headFile(spark, sfDir, spec)
         val installed = withHeadLock(hf) {
           if (readHead(hf).contains(h)) { replaceFile(hf, renderHead(h1)); true }
           else false
         }
-        if (installed) sweepUnreferenced(spark, kind, config, sfDir, table, h1)
-        headAware(spark, kind, config, sfDir, table, partitionCols)(buildBase)
-      case _ => current
+        if (installed) sweepUnreferenced(spark, sfDir, spec, h1)
+        current(spark, sfDir, spec)
+      case _ => view
     }
   }
 
-  /** [[compactStore]] for the MinHash signature store. */
-  def compactMinhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "minhash_sigs", "n3_k128", sfDir, "documents") {
+  // ------------------------------------------------------------------
+  // The stores — lazy because configs read vals of other objects
+  // (LlmQueries.ClfIters, TextAnalysis.DsirBuckets) and of this one
+  // (OpqSeed), which object initialization order does not guarantee
+  // ------------------------------------------------------------------
+
+  private[graft] lazy val minhashSigsStore =
+    StoreSpec.flat("minhash_sigs", "n3_k128", "documents") { (spark, sfDir) =>
       Dedup.minhashSignatureTable(Tables.documents(spark, sfDir),
         "doc_id", "text", shingleN = 3, k = 128, spread = true)
     }
 
-  /** [[compactStore]] for the embedding signature store. */
-  def compactEmbeddingSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "emb_sigs", "d64_r16b128", sfDir, "embeddings") {
+  /** Stored MinHash(128) signature table `(id, n_sh, sig)` over
+    * `documents` — the corpus artifact incremental near-dup
+    * ([[graft.llm.Dedup.dedupIncrementalNear]]) judges new batches
+    * against: the corpus is signed ONCE; every future batch band-joins
+    * its (broadcast) band keys into this table and touches corpus text
+    * only to exact-verify the tiny candidate set. Absorb-able
+    * (`minhashSigsStore`; batch rows from
+    * [[graft.llm.Dedup.minhashSignatureTable]]): after an absorb the view
+    * is corpus ∪ absorbed batches (base + delta union behind the head
+    * pointer). */
+  def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
+    current(spark, sfDir, minhashSigsStore)
+
+  private[graft] lazy val embSigsStore =
+    StoreSpec.flat("emb_sigs", "d64_r16b128", "embeddings") { (spark, sfDir) =>
       graft.llm.Similarity.lshSigRowsTyped(
         Tables.embeddings(spark, sfDir), "vec_id", "embedding",
         bands = 128, planesPerBand = 16, dims = 64, spread = true)
     }
 
-  /** [[compactStore]] for the IVF index (keeps the cell-partitioned
-    * layout, so searches over the compacted index prune identically).
-    * Retired split-parent cells are copied into the compacted entry as
-    * dead weight — the live-cell filter keeps hiding them; a periodic
-    * retrain is the rewrite that actually drops them. */
-  def compactIvfIndex(spark: SparkSession, sfDir: String,
-                      k: Int = 8, iters: Int = 2): IvfIndex = {
-    val cents = ivfCentroidsCurrent(spark, sfDir, k, iters)
-    val view = compactStore(spark, "ivf_index", s"k${k}_i$iters", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      ivfBaseRows(spark, sfDir, ivfCentroids(spark, sfDir, k, iters))
-    }
-    IvfIndex(filterLiveCells(normalizeIvf(view), cents), cents)
-  }
+  /** Stored sign-LSH bucket table `(id, sig)` over `embeddings` at the
+    * DEEP banding production config (16 planes × 128 bands — the 252×
+    * measured-prune operating point from BASELINE.md's crossover; the
+    * 2,048-plane signing goes through the typed JIT kernel) — the corpus
+    * artifact incremental embedding near-dup
+    * ([[graft.llm.Dedup.dedupIncrementalEmbedding]]) judges new vector
+    * batches against. Hyperplanes derive from a deterministic integer
+    * formula, so a later batch signs itself consistently with this
+    * table without any persisted RNG state. Absorb-able
+    * (`embSigsStore`; batch rows from
+    * [[graft.llm.Similarity.lshSigRowsTyped]]). */
+  def embeddingSignatures(spark: SparkSession, sfDir: String): DataFrame =
+    current(spark, sfDir, embSigsStore)
 
-  /** Absorb kept batch docs' MinHash signatures (schema of
-    * [[graft.llm.Dedup.minhashSignatureTable]]: `(id, n_sh, sig)`) into
-    * [[minhashSignatures]]'s store — after this, the next batch judged via
-    * the stored signatures sees corpus ∪ kept(this batch). */
-  def absorbMinhashSignatures(spark: SparkSession, sfDir: String,
-                              keptSigs: DataFrame, batchId: String): DataFrame =
-    absorbInto(spark, "minhash_sigs", "n3_k128", sfDir, "documents",
-        keptSigs, batchId) {
-      Dedup.minhashSignatureTable(Tables.documents(spark, sfDir),
-        "doc_id", "text", shingleN = 3, k = 128, spread = true)
-    }
-
-  /** Absorb kept batch vectors' sign-LSH signatures (schema of
-    * [[graft.llm.Similarity.lshSigRowsTyped]]: `(id, sig)`) into
-    * [[embeddingSignatures]]'s store. */
-  def absorbEmbeddingSignatures(spark: SparkSession, sfDir: String,
-                                keptSigs: DataFrame, batchId: String): DataFrame =
-    absorbInto(spark, "emb_sigs", "d64_r16b128", sfDir, "embeddings",
-        keptSigs, batchId) {
-      graft.llm.Similarity.lshSigRowsTyped(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        bands = 128, planesPerBand = 16, dims = 64, spread = true)
+  private[graft] lazy val contentHashesStore =
+    StoreSpec.flat("content_hashes", "md5", "documents") { (spark, sfDir) =>
+      Tables.documents(spark, sfDir).select(
+        col("doc_id").cast("long").as("id"),
+        Dedup.contentHashSafe(col("text")).as("h"))
     }
 
   /** Stored content-hash table `(id, h)` over `documents` — the corpus
@@ -745,25 +804,19 @@ object Materialized {
     * batches against: the corpus text is hashed ONCE; every future batch
     * builds its membership sketch from this 16-byte/doc view and
     * exact-confirms candidates against the SAME view, so day-2 judgments
-    * never touch corpus text. Absorb-able: after [[absorbContentHashes]]
-    * the view is corpus ∪ absorbed keeps. */
+    * never touch corpus text. Absorb-able (`contentHashesStore`): after an
+    * absorb the view is corpus ∪ absorbed keeps. */
   def contentHashes(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "content_hashes", "md5", sfDir, "documents") {
-      Tables.documents(spark, sfDir).select(
-        col("doc_id").cast("long").as("id"),
-        Dedup.contentHashSafe(col("text")).as("h"))
-    }
+    current(spark, sfDir, contentHashesStore)
 
-  /** Absorb kept batch docs' content hashes (`(id, h)`) into
-    * [[contentHashes]]'s store — the next batch's sketch and confirm view
-    * see corpus ∪ kept(this batch), exactly once per batch id. */
-  def absorbContentHashes(spark: SparkSession, sfDir: String,
-                          keptHashes: DataFrame, batchId: String): DataFrame =
-    absorbInto(spark, "content_hashes", "md5", sfDir, "documents",
-        keptHashes, batchId) {
-      Tables.documents(spark, sfDir).select(
-        col("doc_id").cast("long").as("id"),
-        Dedup.contentHashSafe(col("text")).as("h"))
+  private lazy val bpeMergesStore =
+    StoreSpec.flat("bpe_merges", "m256_b32", "documents") { (spark, sfDir) =>
+      // the delta-maintained trainer: identical merge list row-for-row
+      // (LlmSpec equivalence property), one corpus scan instead of one
+      // pair-count scan per round — same artifact, cheaper build, so the
+      // config key stays m256_b32
+      graft.llm.TextAnalysis.bpeTrainDelta(Tables.documents(spark, sfDir), "text",
+        merges = 256, batch = 32)
     }
 
   /** Stored BPE tokenizer artifact: the rank-ordered merge table
@@ -773,13 +826,14 @@ object Materialized {
     * ([[graft.llm.TextAnalysis.bpeDocTokensFromMerges]]) instead of
     * re-paying the training scans. */
   def bpeMerges(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "bpe_merges", "m256_b32", sfDir, "documents") {
-      // the delta-maintained trainer: identical merge list row-for-row
-      // (LlmSpec equivalence property), one corpus scan instead of one
-      // pair-count scan per round — same artifact, cheaper build, so the
-      // config key stays m256_b32
-      graft.llm.TextAnalysis.bpeTrainDelta(Tables.documents(spark, sfDir), "text",
-        merges = 256, batch = 32)
+    base(spark, sfDir, bpeMergesStore)
+
+  private lazy val bpeBytesStore =
+    StoreSpec.flat("bpe_bytes", "m256_b32", "documents") { (spark, sfDir) =>
+      graft.llm.TextAnalysis.bpeTrain(
+        graft.llm.TextAnalysis.byteLevelCorpus(
+          LlmQueries.byteCorpusKeyed(spark, sfDir), "text"),
+        "text", merges = 256, batch = 32)
     }
 
   /** Stored BYTE-level BPE tokenizer artifact: the rank-ordered merge
@@ -791,19 +845,10 @@ object Materialized {
     * byte-mapped piece stream) replay the stored list instead of
     * re-paying the training scans. */
   def bpeByteMerges(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "bpe_bytes", "m256_b32", sfDir, "documents") {
-      graft.llm.TextAnalysis.bpeTrain(
-        graft.llm.TextAnalysis.byteLevelCorpus(
-          LlmQueries.byteCorpusKeyed(spark, sfDir), "text"),
-        "text", merges = 256, batch = 32)
-    }
+    base(spark, sfDir, bpeBytesStore)
 
-  /** Media feature near-dup pair table at the consumed threshold
-    * (cosine ≥ 0.9999 over the 6-dp-rounded decode-stub features) —
-    * `mm_near_dup` reads it; built once per corpus like the text
-    * embedding pair table ([[embeddingPairs]]). */
-  def mmPairs(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "mm_pairs", "stub8_t9999", sfDir, "documents") {
+  private lazy val mmPairsStore =
+    StoreSpec.flat("mm_pairs", "stub8_t9999", "documents") { (spark, sfDir) =>
       val media = graft.llm.Multimodal.asMedia(
         Tables.documents(spark, sfDir), "doc_id", "text")
       // decode failures (ok=false: null payloads) and empty feature
@@ -818,13 +863,32 @@ object Materialized {
         threshold = 0.9999)
     }
 
+  /** Media feature near-dup pair table at the consumed threshold
+    * (cosine ≥ 0.9999 over the 6-dp-rounded decode-stub features) —
+    * `mm_near_dup` reads it; built once per corpus like the text
+    * embedding pair table ([[embeddingPairs]]). */
+  def mmPairs(spark: SparkSession, sfDir: String): DataFrame =
+    base(spark, sfDir, mmPairsStore)
+
+  private lazy val lmModelStore =
+    StoreSpec.flat("lm_model", "unigram_ws", "documents") { (spark, sfDir) =>
+      graft.llm.TextAnalysis.lmModel(Tables.documents(spark, sfDir), "text")
+    }
+
   /** Stored unigram model `(word, cnt)` over `documents`
     * ([[graft.llm.TextAnalysis.lmModel]]) — trained once per corpus;
     * scoring runs ([[graft.llm.TextAnalysis.lmScoreFromModel]]) broadcast
     * the stored vocabulary instead of re-aggregating the corpus. */
   def lmUnigrams(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "lm_model", "unigram_ws", sfDir, "documents") {
-      graft.llm.TextAnalysis.lmModel(Tables.documents(spark, sfDir), "text")
+    base(spark, sfDir, lmModelStore)
+
+  private lazy val clfModelStore =
+    StoreSpec.flat("clf_model",
+        s"logreg_b${graft.llm.TextAnalysis.QualityClfBuckets}_i${LlmQueries.ClfIters}",
+        "documents") { (spark, sfDir) =>
+      graft.llm.TextAnalysis.qualityClfTrain(
+        LlmQueries.clfLabeled(spark, sfDir), "id", "text", "y",
+        iters = LlmQueries.ClfIters, lr = LlmQueries.ClfLr)
     }
 
   /** Stored trained quality-classifier weights `(bucket, w)` (intercept at
@@ -835,12 +899,12 @@ object Materialized {
     * runs broadcast the stored weight table instead of re-running GD —
     * the `lm_model`/`bpe_model` production pattern for the learned gate. */
   def clfWeights(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "clf_model",
-        s"logreg_b${graft.llm.TextAnalysis.QualityClfBuckets}_i${LlmQueries.ClfIters}",
-        sfDir, "documents") {
-      graft.llm.TextAnalysis.qualityClfTrain(
-        LlmQueries.clfLabeled(spark, sfDir), "id", "text", "y",
-        iters = LlmQueries.ClfIters, lr = LlmQueries.ClfLr)
+    base(spark, sfDir, clfModelStore)
+
+  private lazy val knTypesStore =
+    StoreSpec.flat("kn_types", "d075", "documents") { (spark, sfDir) =>
+      graft.llm.TextAnalysis.knTypeTable(Tables.documents(spark, sfDir),
+        "doc_id", "text")
     }
 
   /** Stored Kneser–Ney type table `(pw, w, lp)`
@@ -848,8 +912,12 @@ object Materialized {
     * bigram model trained once per corpus snapshot; scoring runs replay
     * the stored table instead of re-deriving the four count tables. */
   def knTypes(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "kn_types", "d075", sfDir, "documents") {
-      graft.llm.TextAnalysis.knTypeTable(Tables.documents(spark, sfDir),
+    base(spark, sfDir, knTypesStore)
+
+  private lazy val kn5TypesStore =
+    StoreSpec.flat("kn5_types", "even_split", "documents", "ord") { (spark, sfDir) =>
+      graft.llm.TextAnalysis.kn5TypeTable(
+        Tables.documents(spark, sfDir).where(col("doc_id") % 2 === 0),
         "doc_id", "text")
     }
 
@@ -860,11 +928,11 @@ object Materialized {
     * never re-reads the training corpus. Partitioned by `ord` so each
     * per-order consumer scans only its slice. */
   def kn5Types(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "kn5_types", "even_split", sfDir, "documents",
-      partitionCols = Seq("ord")) {
-      graft.llm.TextAnalysis.kn5TypeTable(
-        Tables.documents(spark, sfDir).where(col("doc_id") % 2 === 0),
-        "doc_id", "text")
+    base(spark, sfDir, kn5TypesStore)
+
+  private lazy val kn5TypesPrunedStore =
+    StoreSpec.flat("kn5_types_pruned", "even_split_p00111", "documents", "ord") {
+      (spark, sfDir) => graft.llm.TextAnalysis.kn5Prune(kn5Types(spark, sfDir))
     }
 
   /** COUNT-THRESHOLD-PRUNED stored 5-gram type table (KenLM's
@@ -878,9 +946,11 @@ object Materialized {
     * stored full table: pruning costs one bounded artifact scan, never a
     * corpus re-count. */
   def kn5TypesPruned(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "kn5_types_pruned", "even_split_p00111", sfDir,
-      "documents", partitionCols = Seq("ord")) {
-      graft.llm.TextAnalysis.kn5Prune(kn5Types(spark, sfDir))
+    base(spark, sfDir, kn5TypesPrunedStore)
+
+  private lazy val kn5QuantStore =
+    StoreSpec.flat("kn5_quant", "even_split_p00111_q6c1", "documents", "kind", "ord") {
+      (spark, sfDir) => graft.llm.TextAnalysis.kn5QuantModel(kn5TypesPruned(spark, sfDir))
     }
 
   /** Stored QUANTIZED ARPA-style 5-gram model over the pruned types
@@ -889,9 +959,13 @@ object Materialized {
     * longs, `(kind, ord)`-partitioned so each scoring join leg reads only
     * its slice. Scoring against it pays ZERO model-side aggregation. */
   def kn5Quant(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "kn5_quant", "even_split_p00111_q6c1", sfDir,
-      "documents", partitionCols = Seq("kind", "ord")) {
-      graft.llm.TextAnalysis.kn5QuantModel(kn5TypesPruned(spark, sfDir))
+    base(spark, sfDir, kn5QuantStore)
+
+  private lazy val kn5QuantModStore =
+    StoreSpec.flat("kn5_quant_mod", "even_split_p00111_cg_q6c1", "documents",
+        "kind", "ord") { (spark, sfDir) =>
+      graft.llm.TextAnalysis.kn5QuantModel(kn5TypesPruned(spark, sfDir),
+        modified = true)
     }
 
   /** Stored quantized MODIFIED-KN model (Chen & Goodman count-of-count
@@ -901,21 +975,27 @@ object Materialized {
     * [[graft.llm.TextAnalysis.lmScoreKn5Quant]] joins: the modified-ness
     * lives entirely in the stored qa6/qb6 values. */
   def kn5QuantMod(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "kn5_quant_mod", "even_split_p00111_cg_q6c1", sfDir,
-      "documents", partitionCols = Seq("kind", "ord")) {
-      graft.llm.TextAnalysis.kn5QuantModel(kn5TypesPruned(spark, sfDir),
-        modified = true)
+    base(spark, sfDir, kn5QuantModStore)
+
+  private lazy val kn5ScoresPrunedStore =
+    StoreSpec.flat("kn5_scores_pruned", "even_split_p00111_d075", "documents") {
+      (spark, sfDir) =>
+        graft.llm.TextAnalysis.lmScoreKn5FromModel(
+          Tables.documents(spark, sfDir), "doc_id", "text",
+          kn5TypesPruned(spark, sfDir))
     }
 
   /** Stored per-doc scores against the PRUNED model — the
     * [[kn5Scores]] staging with the production-pruned artifact; the
     * perplexity gate consumes these unchanged. */
   def kn5ScoresPruned(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "kn5_scores_pruned", "even_split_p00111_d075",
-      sfDir, "documents") {
+    base(spark, sfDir, kn5ScoresPrunedStore)
+
+  private lazy val kn5ScoresStore =
+    StoreSpec.flat("kn5_scores", "even_split_d075", "documents") { (spark, sfDir) =>
       graft.llm.TextAnalysis.lmScoreKn5FromModel(
         Tables.documents(spark, sfDir), "doc_id", "text",
-        kn5TypesPruned(spark, sfDir))
+        kn5Types(spark, sfDir))
     }
 
   /** Stored per-doc 5-gram KN scores `(doc_id, n_words, n_oov, nll_sum)`
@@ -926,10 +1006,13 @@ object Materialized {
     * bucketing's two passes then cost two parquet scans, not two scoring
     * replays. */
   def kn5Scores(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "kn5_scores", "even_split_d075", sfDir, "documents") {
-      graft.llm.TextAnalysis.lmScoreKn5FromModel(
-        Tables.documents(spark, sfDir), "doc_id", "text",
-        kn5Types(spark, sfDir))
+    base(spark, sfDir, kn5ScoresStore)
+
+  private lazy val phashSigsStore =
+    StoreSpec.flat("phash_sigs", "b60_spec64k", "documents") { (spark, sfDir) =>
+      graft.llm.Multimodal.phashSketches(
+        graft.llm.Multimodal.asMedia(Tables.documents(spark, sfDir),
+          "doc_id", "text"))
     }
 
   /** Stored perceptual sketch table `(id, sig)` over `documents`-as-media
@@ -939,10 +1022,12 @@ object Materialized {
     * into this table and never re-reads media bytes (the
     * [[minhashSignatures]] pattern at the media pillar). */
   def phashSigs(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "phash_sigs", "b60_spec64k", sfDir, "documents") {
-      graft.llm.Multimodal.phashSketches(
-        graft.llm.Multimodal.asMedia(Tables.documents(spark, sfDir),
-          "doc_id", "text"))
+    base(spark, sfDir, phashSigsStore)
+
+  private[graft] lazy val hammingSigsStore =
+    StoreSpec.flat("hamming_sigs", "d64_b1_k128", "embeddings") { (spark, sfDir) =>
+      graft.llm.Similarity.hammingSigRows(
+        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
     }
 
   /** Stored binary-sketch signature table `(id, sig, slo, shi)` over
@@ -954,25 +1039,17 @@ object Materialized {
     * code per row (column-pruned) instead of re-reading and re-signing
     * the 512-byte raw vectors. Codes are exact integer sign decisions,
     * so a search through the store is bit-replayable with the live
-    * re-sketch path. Absorb-able ([[absorbHammingSigs]]): after a
-    * streaming ADC micro-batch commits its keepers, the view is
-    * corpus ∪ absorbed keeps. */
+    * re-sketch path. Absorb-able (`hammingSigsStore`; batch rows from
+    * [[graft.llm.Similarity.hammingSigRows]]): after a streaming ADC
+    * micro-batch commits its keepers, the view is corpus ∪ absorbed
+    * keeps. */
   def hammingSigs(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "hamming_sigs", "d64_b1_k128", sfDir, "embeddings") {
-      graft.llm.Similarity.hammingSigRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
-    }
+    current(spark, sfDir, hammingSigsStore)
 
-  /** Absorb kept batch vectors' binary-sketch rows (schema of
-    * [[graft.llm.Similarity.hammingSigRows]]: `(id, sig, slo, shi)`)
-    * into [[hammingSigs]]' store — exactly once per batch id; the next
-    * `FromSigs` search sees corpus ∪ kept(this batch). */
-  def absorbHammingSigs(spark: SparkSession, sfDir: String,
-                        keptSigs: DataFrame, batchId: String): DataFrame =
-    absorbInto(spark, "hamming_sigs", "d64_b1_k128", sfDir, "embeddings",
-        keptSigs, batchId) {
-      graft.llm.Similarity.hammingSigRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
+  private[graft] lazy val q8CodesStore =
+    StoreSpec.flat("q8_codes", "d64_s127", "embeddings") { (spark, sfDir) =>
+      graft.llm.Similarity.q8CodeRows(
+        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
     }
 
   /** Stored INT8 scalar-quantization code table `(id, scale, q)` over
@@ -983,24 +1060,17 @@ object Materialized {
     * `scale` too (it cancels in the cosine). Exclusion rule identical
     * to [[hammingSigs]], so the two stored artifacts cover the same
     * ids and the enforced `FromSigs` coverage contract holds between
-    * them by construction; head-aware + absorb-able on the same
+    * them by construction; head-aware + absorb-able (`q8CodesStore`;
+    * batch rows from [[graft.llm.Similarity.q8CodeRows]]) on the same
     * batch-id ledger. */
   def q8Codes(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "q8_codes", "d64_s127", sfDir, "embeddings") {
-      graft.llm.Similarity.q8CodeRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-    }
+    current(spark, sfDir, q8CodesStore)
 
-  /** Absorb kept batch vectors' int8 code rows into [[q8Codes]]' store —
-    * exactly once per batch id, the [[absorbHammingSigs]] contract: after
-    * a streaming micro-batch commits its keepers, the SQ-rerank search
-    * sees the same corpus every other stored path does. */
-  def absorbQ8Codes(spark: SparkSession, sfDir: String, keptVecs: DataFrame,
-                    idCol: String, vecCol: String, batchId: String): DataFrame =
-    absorbInto(spark, "q8_codes", "d64_s127", sfDir, "embeddings",
-        graft.llm.Similarity.q8CodeRows(keptVecs, idCol, vecCol), batchId) {
-      graft.llm.Similarity.q8CodeRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
+  private lazy val winnowFpsStore =
+    StoreSpec.flat("winnow_fps", "k4_w4_h44", "documents") { (spark, sfDir) =>
+      graft.llm.Dedup.winnowFingerprints(Tables.documents(spark, sfDir),
+          "doc_id", "text", k = 4, w = 4)
+        .select(col("doc_id").as("id"), col("fp")).distinct()
     }
 
   /** Stored winnowing fingerprint table `(id, fp)` (distinct,
@@ -1008,10 +1078,12 @@ object Materialized {
     * artifact incremental near-dup judgment joins new batches against,
     * so corpus text is fingerprinted once ever. */
   def winnowFps(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "winnow_fps", "k4_w4_h44", sfDir, "documents") {
-      graft.llm.Dedup.winnowFingerprints(Tables.documents(spark, sfDir),
-          "doc_id", "text", k = 4, w = 4)
-        .select(col("doc_id").as("id"), col("fp")).distinct()
+    base(spark, sfDir, winnowFpsStore)
+
+  private lazy val unigramPiecesStore =
+    StoreSpec.flat("unigram_pieces", "p4_s40_i2", "documents") { (spark, sfDir) =>
+      graft.llm.TextAnalysis.unigramTrain(Tables.documents(spark, sfDir),
+        "text", maxPieceLen = 4, seedSize = 40, iters = 2)
     }
 
   /** Stored unigram-LM tokenizer pieces `(piece, cnt, lp)`
@@ -1019,9 +1091,14 @@ object Materialized {
     * trained once per (corpus, config); encode runs broadcast the stored
     * table instead of re-paying the EM rounds over the word table. */
   def unigramPieces(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "unigram_pieces", "p4_s40_i2", sfDir, "documents") {
-      graft.llm.TextAnalysis.unigramTrain(Tables.documents(spark, sfDir),
-        "text", maxPieceLen = 4, seedSize = 40, iters = 2)
+    base(spark, sfDir, unigramPiecesStore)
+
+  private lazy val unigramPiecesEmStore =
+    StoreSpec.flat("unigram_pieces_em", "p4_s40_i2_t8_s05", "documents") {
+      (spark, sfDir) =>
+        graft.llm.TextAnalysis.unigramTrainSoft(Tables.documents(spark, sfDir),
+          "text", maxPieceLen = 4, seedSize = 40, iters = 2,
+          targetMulti = 8, shrink = 0.5)
     }
 
   /** Stored SOFT-EM unigram tokenizer pieces `(piece, em6, lp)`
@@ -1030,11 +1107,14 @@ object Materialized {
     * the production twin's artifact: encode runs broadcast the stored
     * `(piece, lp)` rows instead of re-paying the EM rounds. */
   def unigramPiecesEm(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "unigram_pieces_em", "p4_s40_i2_t8_s05", sfDir,
-      "documents") {
-      graft.llm.TextAnalysis.unigramTrainSoft(Tables.documents(spark, sfDir),
-        "text", maxPieceLen = 4, seedSize = 40, iters = 2,
-        targetMulti = 8, shrink = 0.5)
+    base(spark, sfDir, unigramPiecesEmStore)
+
+  private lazy val unigramPiecesEmLossStore =
+    StoreSpec.flat("unigram_pieces_em_loss", "p4_s40_i2_t8_s05", "documents") {
+      (spark, sfDir) =>
+        graft.llm.TextAnalysis.unigramTrainSoft(Tables.documents(spark, sfDir),
+          "text", maxPieceLen = 4, seedSize = 40, iters = 2,
+          targetMulti = 8, shrink = 0.5, lossPrune = true)
     }
 
   /** Stored LOSS-PRUNED soft-EM unigram pieces `(piece, em6, loss6, lp)`
@@ -1043,11 +1123,16 @@ object Materialized {
     * (corpus, config); encode runs broadcast the stored `(piece, lp)`
     * rows. */
   def unigramPiecesEmLoss(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "unigram_pieces_em_loss", "p4_s40_i2_t8_s05", sfDir,
-      "documents") {
-      graft.llm.TextAnalysis.unigramTrainSoft(Tables.documents(spark, sfDir),
-        "text", maxPieceLen = 4, seedSize = 40, iters = 2,
-        targetMulti = 8, shrink = 0.5, lossPrune = true)
+    base(spark, sfDir, unigramPiecesEmLossStore)
+
+  // config key bumped (_full): the table became total over the bucket
+  // domain (floor ratios for unobserved buckets) — a cached observed-only
+  // table must not satisfy this contract
+  private lazy val dsirRatiosStore =
+    StoreSpec.flat("dsir_ratios", s"en_b${graft.llm.TextAnalysis.DsirBuckets}_full",
+        "documents") { (spark, sfDir) =>
+      graft.llm.TextAnalysis.dsirRatios(Tables.documents(spark, sfDir),
+        "doc_id", "text", col("lang") === "en")
     }
 
   /** Stored DSIR log-likelihood-ratio table `(bucket, log_ratio)` against
@@ -1056,13 +1141,27 @@ object Materialized {
     * snapshot (≤ 1,024 rows); scoring runs broadcast the stored table
     * instead of re-aggregating the corpus distributions. */
   def dsirRatios(spark: SparkSession, sfDir: String): DataFrame =
-    // config key bumped (_full): the table became total over the bucket
-    // domain (floor ratios for unobserved buckets) — a cached observed-only
-    // table must not satisfy this contract
-    parquetBacked(spark, "dsir_ratios",
-        s"en_b${graft.llm.TextAnalysis.DsirBuckets}_full", sfDir, "documents") {
-      graft.llm.TextAnalysis.dsirRatios(Tables.documents(spark, sfDir),
-        "doc_id", "text", col("lang") === "en")
+    base(spark, sfDir, dsirRatiosStore)
+
+  /** `(id, centroid_id)` of `vecs` assigned against the PINNED base IVF
+    * index's centroids ([[graft.llm.Similarity.ivfAssign]]) — the cell an
+    * absorbed keeper's rows land in for the cell-partitioned stores, whose
+    * layout IS that generation's. Keepers with no angle (zero-norm) emit no
+    * sig row, so an inner join on `id` keeps assignment and codes
+    * consistent exactly as the base build's exclusion does. Centroid drift
+    * is the documented IVF trade: absorbed keepers live in cells trained on
+    * the original corpus until a retrain rebuilds the base layout. */
+  private[graft] def baseCells(spark: SparkSession, sfDir: String, vecs: DataFrame,
+                               idCol: String, vecCol: String): DataFrame =
+    graft.llm.Similarity.ivfAssign(vecs, idCol, vecCol, ivfIndex(spark, sfDir).centroids)
+      .select(col("id").cast("long").as("id"), col("centroid_id"))
+
+  private[graft] lazy val hammingSigsIvfStore =
+    StoreSpec.cells("hamming_sigs_ivf", "d64_k128_cell",
+        "id", "sig", "slo", "shi", "centroid_id") { (spark, sfDir) =>
+      graft.llm.Similarity.hammingSigRows(
+          Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
+        .join(ivfIndex(spark, sfDir).assignment.select(col("id"), col("centroid_id")), "id")
     }
 
   /** CELL-PARTITIONED binary-sketch signature table
@@ -1073,51 +1172,23 @@ object Materialized {
     * probed cell AND reads only the 16-byte sketch columns per surviving
     * row: the two pruning axes composed in one store. Rebuilt when the
     * index retrains (the cell layout IS the index's). Absorb-able
-    * ([[absorbHammingSigsIvf]], the [[hammingSigs]] contract): after a
-    * streaming ADC micro-batch commits its keepers, the hybrid search
-    * sees the SAME corpus the flat `FromSigs` searches do — the two
-    * stored paths can no longer disagree on membership. Absorb deltas
-    * carry their own `centroid_id=` layout, so probed-cell partition
-    * pruning holds across every generation of the union view. */
-  def hammingSigsIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = headAware(spark, "hamming_sigs_ivf", "d64_k128_cell",
-        sfDir, "embeddings", partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfBase(spark, sfDir)
-    }
-    view.select(col("id"), col("sig"), col("slo"), col("shi"),
-      col("centroid_id").cast("long").as("centroid_id"))
-  }
+    * (`hammingSigsIvfStore`; batch rows are the [[hammingSigs]] rows
+    * joined with [[baseCells]]): after a streaming ADC micro-batch commits
+    * its keepers, the hybrid search sees the SAME corpus the flat
+    * `FromSigs` searches do — the two stored paths can no longer disagree
+    * on membership. Absorb deltas carry their own `centroid_id=` layout,
+    * so probed-cell partition pruning holds across every generation of the
+    * union view. */
+  def hammingSigsIvf(spark: SparkSession, sfDir: String): DataFrame =
+    current(spark, sfDir, hammingSigsIvfStore)
 
-  private def hammingSigsIvfBase(spark: SparkSession, sfDir: String): DataFrame = {
-    val idx = ivfIndex(spark, sfDir)
-    graft.llm.Similarity.hammingSigRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
-      .join(idx.assignment.select(col("id"), col("centroid_id")), "id")
-  }
-
-  /** Absorb kept batch vectors into the CELL-PARTITIONED sig store —
-    * exactly once per batch id: each keeper is assigned to its IVF cell
-    * AT ABSORB TIME ([[graft.llm.Similarity.ivfAssign]] against the
-    * PINNED base index's centroids — the generation whose layout this
-    * store is), its sig rows ([[graft.llm.Similarity.hammingSigRows]])
-    * land in that cell's partition, and the head advances. Keepers with
-    * no angle (zero-norm) emit no sig row — exactly the base build's
-    * exclusion — and the inner join on `id` keeps assignment and codes
-    * consistent by construction. Centroid drift is the documented IVF
-    * trade: absorbed keepers live in cells trained on the original
-    * corpus until a retrain rebuilds the base layout. */
-  def absorbHammingSigsIvf(spark: SparkSession, sfDir: String,
-                           keptVecs: DataFrame, idCol: String, vecCol: String,
-                           batchId: String): DataFrame = {
-    val cents = ivfIndex(spark, sfDir).centroids
-    val rows = graft.llm.Similarity.hammingSigRows(keptVecs, idCol, vecCol, dims = 64)
-      .join(graft.llm.Similarity.ivfAssign(keptVecs, idCol, vecCol, cents)
-        .select(col("id").cast("long").as("id"), col("centroid_id")), "id")
-    absorbInto(spark, "hamming_sigs_ivf", "d64_k128_cell", sfDir, "embeddings",
-        rows, batchId, partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfBase(spark, sfDir)
+  private[graft] lazy val hammingSigsIvfResStore =
+    StoreSpec.cells("hamming_sigs_ivfres", "d64_k128_rescell",
+        "id", "slo", "shi", "centroid_id") { (spark, sfDir) =>
+      graft.llm.Similarity.hammingResidualSigRows(
+        Tables.embeddings(spark, sfDir), "vec_id", "embedding",
+        ivfIndex(spark, sfDir).centroids, dims = 64)
     }
-  }
 
   /** CELL-PARTITIONED RESIDUAL-sketch signature table
     * `(id, slo, shi, centroid_id)` over `embeddings`
@@ -1126,43 +1197,19 @@ object Materialized {
     * FAISS binary-IVF refinement): same partition-pruned 16-byte stage 1
     * as [[hammingSigsIvf]], with the sketch entropy concentrated on the
     * within-cell variance the coarse quantizer leaves. Absorb-able
-    * ([[absorbHammingSigsIvfRes]]) like its raw twin, so all three
-    * stored search paths agree on corpus membership after a streaming
-    * micro-batch. */
-  def hammingSigsIvfRes(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = headAware(spark, "hamming_sigs_ivfres", "d64_k128_rescell",
-        sfDir, "embeddings", partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfResBase(spark, sfDir)
-    }
-    view.select(col("id"), col("slo"), col("shi"),
-      col("centroid_id").cast("long").as("centroid_id"))
-  }
+    * (`hammingSigsIvfResStore`; batch rows from the same builder against
+    * the pinned base centroids, which assigns and sketches in one pass)
+    * like its raw twin, so all three stored search paths agree on corpus
+    * membership after a streaming micro-batch. */
+  def hammingSigsIvfRes(spark: SparkSession, sfDir: String): DataFrame =
+    current(spark, sfDir, hammingSigsIvfResStore)
 
-  private def hammingSigsIvfResBase(spark: SparkSession, sfDir: String): DataFrame =
-    graft.llm.Similarity.hammingResidualSigRows(
-      Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-      ivfIndex(spark, sfDir).centroids, dims = 64)
-
-  /** [[absorbHammingSigsIvf]] for the RESIDUAL-sketch cell store —
-    * keepers are assigned AND residual-sketched against the pinned base
-    * centroids in one pass (the builder does both), exactly-once per
-    * batch id. */
-  def absorbHammingSigsIvfRes(spark: SparkSession, sfDir: String,
-                              keptVecs: DataFrame, idCol: String,
-                              vecCol: String, batchId: String): DataFrame =
-    absorbInto(spark, "hamming_sigs_ivfres", "d64_k128_rescell", sfDir,
-        "embeddings",
-        graft.llm.Similarity.hammingResidualSigRows(keptVecs, idCol, vecCol,
-          ivfIndex(spark, sfDir).centroids, dims = 64),
-        batchId, partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfResBase(spark, sfDir)
-    }
-
-  /** [[compactStore]] for the binary-sketch signature store. */
-  def compactHammingSigs(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "hamming_sigs", "d64_b1_k128", sfDir, "embeddings") {
-      graft.llm.Similarity.hammingSigRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", dims = 64)
+  private[graft] lazy val q8CodesIvfStore =
+    StoreSpec.cells("q8_codes_ivf", "d64_s127_cell",
+        "id", "scale", "q", "centroid_id") { (spark, sfDir) =>
+      graft.llm.Similarity.q8CodeRows(
+          Tables.embeddings(spark, sfDir), "vec_id", "embedding")
+        .join(ivfIndex(spark, sfDir).assignment.select(col("id"), col("centroid_id")), "id")
     }
 
   /** CELL-PARTITIONED int8 code table `(id, scale, q, centroid_id)` —
@@ -1175,92 +1222,14 @@ object Materialized {
     * store. Same exclusion rule and assignment as
     * [[hammingSigsIvfRes]], so the coverage contract holds
     * cell-by-cell. Rebuilt when the index retrains; absorb-able
-    * ([[absorbQ8CodesIvf]]). */
-  def q8CodesIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val view = headAware(spark, "q8_codes_ivf", "d64_s127_cell", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      q8CodesIvfBase(spark, sfDir)
-    }
-    view.select(col("id"), col("scale"), col("q"),
-      col("centroid_id").cast("long").as("centroid_id"))
-  }
+    * (`q8CodesIvfStore`; batch rows are the [[q8Codes]] rows joined with
+    * [[baseCells]]), so the composed search's PRUNED rerank still covers
+    * every absorbed keeper's cell. */
+  def q8CodesIvf(spark: SparkSession, sfDir: String): DataFrame =
+    current(spark, sfDir, q8CodesIvfStore)
 
-  private def q8CodesIvfBase(spark: SparkSession, sfDir: String): DataFrame = {
-    val idx = ivfIndex(spark, sfDir)
-    graft.llm.Similarity.q8CodeRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-      .join(idx.assignment.select(col("id"), col("centroid_id")), "id")
-  }
-
-  /** [[absorbHammingSigsIvf]] for the cell-partitioned code store —
-    * keepers assigned against the pinned base centroids and their int8
-    * code rows landed in that cell's partition, exactly-once per batch
-    * id, so the composed search's PRUNED rerank still covers every
-    * absorbed keeper's cell. */
-  def absorbQ8CodesIvf(spark: SparkSession, sfDir: String,
-                       keptVecs: DataFrame, idCol: String, vecCol: String,
-                       batchId: String): DataFrame = {
-    val cents = ivfIndex(spark, sfDir).centroids
-    val rows = graft.llm.Similarity.q8CodeRows(keptVecs, idCol, vecCol)
-      .join(graft.llm.Similarity.ivfAssign(keptVecs, idCol, vecCol, cents)
-        .select(col("id").cast("long").as("id"), col("centroid_id")), "id")
-    absorbInto(spark, "q8_codes_ivf", "d64_s127_cell", sfDir, "embeddings",
-        rows, batchId, partitionCols = Seq("centroid_id")) {
-      q8CodesIvfBase(spark, sfDir)
-    }
-  }
-
-  /** [[compactStore]] for the int8 code store — maintenance parity with
-    * its sig-store twin, so a long-absorbing deployment can fold either
-    * chain without the other drifting out of the coverage contract. */
-  def compactQ8Codes(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "q8_codes", "d64_s127", sfDir, "embeddings") {
-      graft.llm.Similarity.q8CodeRows(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-    }
-
-  /** [[compactStore]] for the CELL-PARTITIONED stores — the compacted
-    * entry is rewritten `partitionBy(centroid_id)`, so probed-cell
-    * partition pruning holds across the fold exactly as it holds across
-    * absorb deltas. A streaming deployment absorbing every micro-batch
-    * into five stores needs all five chains foldable, or read
-    * amplification returns through whichever store was left out. */
-  def compactHammingSigsIvf(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "hamming_sigs_ivf", "d64_k128_cell", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfBase(spark, sfDir)
-    }.select(col("id"), col("sig"), col("slo"), col("shi"),
-      col("centroid_id").cast("long").as("centroid_id"))
-
-  /** [[compactHammingSigsIvf]] for the residual-sketch cell store. */
-  def compactHammingSigsIvfRes(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "hamming_sigs_ivfres", "d64_k128_rescell", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      hammingSigsIvfResBase(spark, sfDir)
-    }.select(col("id"), col("slo"), col("shi"),
-      col("centroid_id").cast("long").as("centroid_id"))
-
-  /** [[compactHammingSigsIvf]] for the cell-partitioned code store. */
-  def compactQ8CodesIvf(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "q8_codes_ivf", "d64_s127_cell", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      q8CodesIvfBase(spark, sfDir)
-    }.select(col("id"), col("scale"), col("q"),
-      col("centroid_id").cast("long").as("centroid_id"))
-
-  /** [[compactStore]] for the content-hash store. */
-  def compactContentHashes(spark: SparkSession, sfDir: String): DataFrame =
-    compactStore(spark, "content_hashes", "md5", sfDir, "documents") {
-      Tables.documents(spark, sfDir).select(
-        col("doc_id").cast("long").as("id"),
-        Dedup.contentHashSafe(col("text")).as("h"))
-    }
-
-  /** Verified MinHash(128)+LSH(32×4) near-dup pair table at J ≥ 0.8 over
-    * `documents` — written once, read by `dedup_minhash`, `dedup_clusters`
-    * and `pipeline_training_set`. */
-  def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "minhash_pairs", "n3_b32_r4_t080", sfDir, "documents") {
+  private lazy val minhashPairsStore =
+    StoreSpec.flat("minhash_pairs", "n3_b32_r4_t080", "documents") { (spark, sfDir) =>
       // materialize=true: eagerly cache the (tiny) verified pair set and
       // free the signature/shingle intermediates before the parquet write
       Dedup.minhashLsh(Tables.documents(spark, sfDir), "doc_id", "text",
@@ -1268,50 +1237,38 @@ object Materialized {
         materialize = true)
     }
 
-  /** Stored MinHash(128) signature table `(id, n_sh, sig)` over
-    * `documents` — the corpus artifact incremental near-dup
-    * ([[graft.llm.Dedup.dedupIncrementalNear]]) judges new batches
-    * against: the corpus is signed ONCE; every future batch band-joins
-    * its (broadcast) band keys into this table and touches corpus text
-    * only to exact-verify the tiny candidate set. Absorb-able: after
-    * [[absorbMinhashSignatures]] the view is corpus ∪ absorbed batches
-    * (base + delta union behind the head pointer). */
-  def minhashSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "minhash_sigs", "n3_k128", sfDir, "documents") {
-      Dedup.minhashSignatureTable(Tables.documents(spark, sfDir),
-        "doc_id", "text", shingleN = 3, k = 128, spread = true)
-    }
+  /** Verified MinHash(128)+LSH(32×4) near-dup pair table at J ≥ 0.8 over
+    * `documents` — written once, read by `dedup_minhash`, `dedup_clusters`
+    * and `pipeline_training_set`. */
+  def minhashPairs(spark: SparkSession, sfDir: String): DataFrame =
+    base(spark, sfDir, minhashPairsStore)
 
-  /** Stored sign-LSH bucket table `(id, sig)` over `embeddings` at the
-    * DEEP banding production config (16 planes × 128 bands — the 252×
-    * measured-prune operating point from BASELINE.md's crossover; the
-    * 2,048-plane signing goes through the typed JIT kernel) — the corpus
-    * artifact incremental embedding near-dup
-    * ([[graft.llm.Dedup.dedupIncrementalEmbedding]]) judges new vector
-    * batches against. Hyperplanes derive from a deterministic integer
-    * formula, so a later batch signs itself consistently with this
-    * table without any persisted RNG state. */
-  def embeddingSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    headAware(spark, "emb_sigs", "d64_r16b128", sfDir, "embeddings") {
-      graft.llm.Similarity.lshSigRowsTyped(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding",
-        bands = 128, planesPerBand = 16, dims = 64, spread = true)
+  private lazy val ngramPairsStore =
+    StoreSpec.flat("ngram_pairs", "n3_t060", "documents") { (spark, sfDir) =>
+      Dedup.ngramJaccard(Tables.documents(spark, sfDir), "doc_id", "text",
+        shingleN = 3, threshold = 0.6, materialize = true)
     }
 
   /** Exact word-3-gram Jaccard pair table at J ≥ 0.6 (inverted-index /
     * PPJoin adaptive join) — `dedup_ngram_jaccard` reads it. */
   def ngramPairs(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "ngram_pairs", "n3_t060", sfDir, "documents") {
-      Dedup.ngramJaccard(Tables.documents(spark, sfDir), "doc_id", "text",
-        shingleN = 3, threshold = 0.6, materialize = true)
+    base(spark, sfDir, ngramPairsStore)
+
+  private lazy val simhashPairsStore =
+    StoreSpec.flat("simhash_pairs", "h3_b60", "documents") { (spark, sfDir) =>
+      Dedup.simhashPairs(Tables.documents(spark, sfDir), "doc_id", "text",
+        maxHamming = 3, materialize = true)
     }
 
   /** SimHash(60-bit) pair table at hamming ≤ 3 (pigeonhole banding,
     * exact) — `dedup_simhash` reads it. */
   def simhashPairs(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "simhash_pairs", "h3_b60", sfDir, "documents") {
-      Dedup.simhashPairs(Tables.documents(spark, sfDir), "doc_id", "text",
-        maxHamming = 3, materialize = true)
+    base(spark, sfDir, simhashPairsStore)
+
+  private lazy val embPairsStore =
+    StoreSpec.flat("emb_pairs", "d64_t045_r3b64", "embeddings") { (spark, sfDir) =>
+      Dedup.embeddingNearDupLsh(Tables.embeddings(spark, sfDir),
+        "vec_id", "embedding", dims = 64, threshold = 0.45)
     }
 
   /** Banded-LSH embedding near-dup pair table at the CONSUMED threshold
@@ -1323,16 +1280,31 @@ object Materialized {
     * [[embeddingPairStats]], a streaming aggregate that never materializes
     * the pairs at all. */
   def embeddingPairs(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "emb_pairs", "d64_t045_r3b64", sfDir, "embeddings") {
-      Dedup.embeddingNearDupLsh(Tables.embeddings(spark, sfDir),
-        "vec_id", "embedding", dims = 64, threshold = 0.45)
-    }
+    base(spark, sfDir, embPairsStore)
 
   /** The two stored tables of an IVF index: `assignment` is
     * `(id, centroid_id, dist, norm, v)` PARTITIONED BY `centroid_id`
     * (searches prune to the probed cells' files); `centroids` is the
     * trained `(centroid_id, vec)` sidecar, unrounded. */
   final case class IvfIndex(assignment: DataFrame, centroids: DataFrame)
+
+  /** The IVF assignment store at `(k, iters)`: every vector in its
+    * trained cell, int8-quantized (`scale`, `qcode`) for column-pruned
+    * quantized searches. Absorb-able through [[appendIvfIndex]]. */
+  private[graft] def ivfIndexStore(k: Int, iters: Int): StoreSpec =
+    StoreSpec.cells("ivf_index", s"k${k}_i$iters",
+        "id", "centroid_id", "dist", "norm", "v", "scale", "qcode") { (spark, sfDir) =>
+      graft.llm.Similarity.ivfIndexRows(Tables.embeddings(spark, sfDir),
+        "vec_id", "embedding", ivfCentroids(spark, sfDir, k, iters))
+    }
+
+  /** The trained k-means centroid sidecar at `(k, iters)`; its head holds
+    * the split/retrain revisions. */
+  private def ivfCentroidsStore(k: Int, iters: Int): StoreSpec =
+    StoreSpec.flat("ivf_centroids", s"k${k}_i$iters", "embeddings") { (spark, sfDir) =>
+      graft.llm.Similarity.ivfTrainCentroids(
+        Tables.embeddings(spark, sfDir), "vec_id", "embedding", k, iters)
+    }
 
   /**
    * Stored IVF index over `embeddings`: k-means centroids trained ONCE
@@ -1347,18 +1319,8 @@ object Materialized {
   def ivfIndex(spark: SparkSession, sfDir: String,
                k: Int = 8, iters: Int = 2): IvfIndex = {
     val cents = ivfCentroids(spark, sfDir, k, iters)
-    val assignment = parquetBacked(spark, "ivf_index", s"k${k}_i$iters", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      ivfBaseRows(spark, sfDir, cents)
-    }
-    // the partition column round-trips through directory names (inferred
-    // int) — restore the build-time long type and column order for consumers
-    IvfIndex(normalizeIvf(assignment), cents)
+    IvfIndex(base(spark, sfDir, ivfIndexStore(k, iters)), cents)
   }
-
-  private def normalizeIvf(assignment: DataFrame): DataFrame =
-    assignment.select(col("id"), col("centroid_id").cast("long").as("centroid_id"),
-      col("dist"), col("norm"), col("v"), col("scale"), col("qcode"))
 
   /** Restrict an index/code view to the cells the given centroid table
     * lists. Cells retired by [[splitIvfCells]] keep their rows in old
@@ -1375,10 +1337,7 @@ object Materialized {
 
   private def ivfCentroids(spark: SparkSession, sfDir: String,
                            k: Int, iters: Int): DataFrame =
-    parquetBacked(spark, "ivf_centroids", s"k${k}_i$iters", sfDir, "embeddings") {
-      graft.llm.Similarity.ivfTrainCentroids(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", k, iters)
-    }
+    base(spark, sfDir, ivfCentroidsStore(k, iters))
 
   /** The CURRENT centroid sidecar: the trained base until
     * [[splitIvfCells]] installs a revision (parent cell replaced by its
@@ -1387,15 +1346,7 @@ object Materialized {
     * table ([[ivfCentroids]]). */
   def ivfCentroidsCurrent(spark: SparkSession, sfDir: String,
                           k: Int = 8, iters: Int = 2): DataFrame =
-    headAware(spark, "ivf_centroids", s"k${k}_i$iters", sfDir, "embeddings") {
-      graft.llm.Similarity.ivfTrainCentroids(
-        Tables.embeddings(spark, sfDir), "vec_id", "embedding", k, iters)
-    }
-
-  private def ivfBaseRows(spark: SparkSession, sfDir: String,
-                          cents: DataFrame): DataFrame =
-    graft.llm.Similarity.ivfIndexRows(
-      Tables.embeddings(spark, sfDir), "vec_id", "embedding", cents)
+    current(spark, sfDir, ivfCentroidsStore(k, iters))
 
   /**
    * Incremental IVF maintenance: assign a NEW vector batch against the
@@ -1423,17 +1374,13 @@ object Materialized {
     // batch's assignment (against pre-split centroids) and its delta
     // publish would retire the very cells the batch just landed in,
     // hiding its rows from the current view. Lock order centroid → index
-    // (absorbInto takes the index head lock inside) matches
+    // (absorb takes the index head lock inside) matches
     // [[splitIvfCells]], so the two writers cannot deadlock.
-    withHeadLock(headFile(spark, "ivf_centroids", s"k${k}_i$iters", sfDir,
-        "embeddings")) {
+    withHeadLock(headFile(spark, sfDir, ivfCentroidsStore(k, iters))) {
       val cents = ivfCentroidsCurrent(spark, sfDir, k, iters)
       val batchRows = graft.llm.Similarity.ivfIndexRows(newVectors, idCol, vecCol, cents)
-      val view = absorbInto(spark, "ivf_index", s"k${k}_i$iters", sfDir, "embeddings",
-          batchRows, batchId, partitionCols = Seq("centroid_id")) {
-        ivfBaseRows(spark, sfDir, ivfCentroids(spark, sfDir, k, iters))
-      }
-      IvfIndex(filterLiveCells(normalizeIvf(view), cents), cents)
+      val view = absorb(spark, sfDir, ivfIndexStore(k, iters), batchRows, batchId)
+      IvfIndex(filterLiveCells(view, cents), cents)
     }
   }
 
@@ -1444,12 +1391,44 @@ object Materialized {
   def ivfIndexCurrent(spark: SparkSession, sfDir: String,
                       k: Int = 8, iters: Int = 2): IvfIndex = {
     val cents = ivfCentroidsCurrent(spark, sfDir, k, iters)
-    val view = headAware(spark, "ivf_index", s"k${k}_i$iters", sfDir, "embeddings",
-        partitionCols = Seq("centroid_id")) {
-      ivfBaseRows(spark, sfDir, ivfCentroids(spark, sfDir, k, iters))
-    }
-    IvfIndex(filterLiveCells(normalizeIvf(view), cents), cents)
+    IvfIndex(filterLiveCells(current(spark, sfDir, ivfIndexStore(k, iters)), cents), cents)
   }
+
+  /** OPQ-lite rotation seed: fully determines the sign-flip diagonal of
+    * the `R = H·D/√d` pre-rotation ([[graft.llm.Similarity.opqSigns]]).
+    * Rides in the artifact config key, so codebooks/codes written under
+    * one rotation can never be served to a reader expecting another —
+    * the "seed stored beside the codebooks" contract. */
+  val OpqSeed = 17L
+
+  /** The PQ codebook and code stores over the stored IVF index's
+    * residuals `v − centroid(cell)`, OPQ-rotated when `rotate` (the
+    * variant rides in the config key). The codes are cell-partitioned
+    * `(id, centroid_id, codes)`, encoded against the same variant's
+    * stored codebooks. */
+  private def pqStores(variant: String, rotate: Boolean): (StoreSpec, StoreSpec) = {
+    def residuals(spark: SparkSession, sfDir: String): DataFrame = {
+      val idx = ivfIndex(spark, sfDir)
+      val r = graft.llm.Similarity.ivfResiduals(idx.assignment, idx.centroids)
+      if (rotate) graft.llm.Similarity.opqRotateResiduals(r,
+        graft.llm.Similarity.opqSigns(64, OpqSeed))
+      else r
+    }
+    val books = StoreSpec.flat("pq_codebooks", s"m8_k16_i2_$variant", "embeddings") {
+      (spark, sfDir) =>
+        graft.llm.Similarity.pqTrainCodebooks(residuals(spark, sfDir),
+          "id", "rv", m = 8, ksub = 16, iters = 2, dims = 64)
+    }
+    val codes = StoreSpec.cells("pq_codes", s"m8_k16_i2_$variant",
+        "id", "centroid_id", "codes") { (spark, sfDir) =>
+      graft.llm.Similarity.pqEncode(residuals(spark, sfDir), "id", "rv",
+        base(spark, sfDir, books), dims = 64, cellCol = Some("centroid_id"))
+    }
+    (books, codes)
+  }
+
+  private lazy val (pqCodebooksStore, pqCodesStore) = pqStores("res", rotate = false)
+  private lazy val (opqCodebooksStore, opqCodesStore) = pqStores(s"opq$OpqSeed", rotate = true)
 
   /** Trained PQ codebooks (8 subspaces × 16 codes × 8 dims, 2 Lloyd
     * rounds) over the IVF RESIDUALS `v − centroid(cell)` of the stored
@@ -1463,12 +1442,7 @@ object Materialized {
     * key carries `res` — a store written by the raw-vector trainer can
     * never be served to a residual reader. */
   def pqCodebooks(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "pq_codebooks", "m8_k16_i2_res", sfDir, "embeddings") {
-      val idx = ivfIndex(spark, sfDir)
-      graft.llm.Similarity.pqTrainCodebooks(
-        graft.llm.Similarity.ivfResiduals(idx.assignment, idx.centroids),
-        "id", "rv", m = 8, ksub = 16, iters = 2, dims = 64)
-    }
+    base(spark, sfDir, pqCodebooksStore)
 
   /** The stored PQ-coded index: every vector's m RESIDUAL code ids
     * co-located with its IVF cell — `partitionBy(centroid_id)`, the
@@ -1477,28 +1451,8 @@ object Materialized {
     * the 8-byte-per-component doubles (~64× less vector data than `v`,
     * ~8× less than the int8 `qcode`s). Built from the stored IVF
     * assignment's residuals in one shuffle-free encode scan. */
-  def pqCodes(spark: SparkSession, sfDir: String): DataFrame = {
-    val cb = pqCodebooks(spark, sfDir)
-    val view = parquetBacked(spark, "pq_codes", "m8_k16_i2_res", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      val idx = ivfIndex(spark, sfDir)
-      graft.llm.Similarity.pqEncode(
-        graft.llm.Similarity.ivfResiduals(idx.assignment, idx.centroids),
-        "id", "rv", cb, dims = 64, cellCol = Some("centroid_id"))
-    }
-    // partition column round-trips through directory names — restore type
-    view.select(col("id"), col("centroid_id").cast("long").as("centroid_id"),
-      col("codes"))
-  }
-
-  /** OPQ-lite rotation seed: fully determines the sign-flip diagonal of
-    * the `R = H·D/√d` pre-rotation ([[graft.llm.Similarity.opqSigns]]).
-    * Rides in the artifact config key, so codebooks/codes written under
-    * one rotation can never be served to a reader expecting another —
-    * the "seed stored beside the codebooks" contract. */
-  val OpqSeed = 17L
-
-  private def opqSigns64: Array[Double] = graft.llm.Similarity.opqSigns(64, OpqSeed)
+  def pqCodes(spark: SparkSession, sfDir: String): DataFrame =
+    base(spark, sfDir, pqCodesStore)
 
   /** Trained PQ codebooks over the ROTATED residuals `R·(v − centroid)`
     * (OPQ-lite: deterministic sign-flip + fast Walsh–Hadamard rotation
@@ -1506,33 +1460,14 @@ object Materialized {
     * [[pqCodebooks]] — the rotation decorrelates the subspace split, the
     * recall/reconstruction gain at equal bytes is pinned in LlmSpec. */
   def opqCodebooks(spark: SparkSession, sfDir: String): DataFrame =
-    parquetBacked(spark, "pq_codebooks", s"m8_k16_i2_opq$OpqSeed", sfDir, "embeddings") {
-      val idx = ivfIndex(spark, sfDir)
-      graft.llm.Similarity.pqTrainCodebooks(
-        graft.llm.Similarity.opqRotateResiduals(
-          graft.llm.Similarity.ivfResiduals(idx.assignment, idx.centroids),
-          opqSigns64),
-        "id", "rv", m = 8, ksub = 16, iters = 2, dims = 64)
-    }
+    base(spark, sfDir, opqCodebooksStore)
 
   /** The stored OPQ-rotated PQ code table — [[pqCodes]]' layout
     * (cell-partitioned, `(id, codes)`), codes quantizing the ROTATED
     * residuals against [[opqCodebooks]]. Same bytes per vector; searches
     * pass the rotation to [[graft.llm.Similarity.pqSearchAdc]]. */
-  def opqCodes(spark: SparkSession, sfDir: String): DataFrame = {
-    val cb = opqCodebooks(spark, sfDir)
-    val view = parquetBacked(spark, "pq_codes", s"m8_k16_i2_opq$OpqSeed", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      val idx = ivfIndex(spark, sfDir)
-      graft.llm.Similarity.pqEncode(
-        graft.llm.Similarity.opqRotateResiduals(
-          graft.llm.Similarity.ivfResiduals(idx.assignment, idx.centroids),
-          opqSigns64),
-        "id", "rv", cb, dims = 64, cellCol = Some("centroid_id"))
-    }
-    view.select(col("id"), col("centroid_id").cast("long").as("centroid_id"),
-      col("codes"))
-  }
+  def opqCodes(spark: SparkSession, sfDir: String): DataFrame =
+    base(spark, sfDir, opqCodesStore)
 
   /** The head view of the stored PQ code table — base ∪ split
     * reassignments, restricted to the current centroid set. Equal to
@@ -1541,29 +1476,9 @@ object Materialized {
     * children re-encode against the SAME codebooks) for ADC searches over
     * the maintained index. */
   def pqCodesCurrent(spark: SparkSession, sfDir: String,
-                     k: Int = 8, iters: Int = 2): DataFrame = {
-    val cb = pqCodebooks(spark, sfDir)
-    val view = headAware(spark, "pq_codes", "m8_k16_i2_res", sfDir,
-        "embeddings", partitionCols = Seq("centroid_id")) {
-      val idx = ivfIndex(spark, sfDir)
-      graft.llm.Similarity.pqEncode(
-        graft.llm.Similarity.ivfResiduals(idx.assignment, idx.centroids),
-        "id", "rv", cb, dims = 64, cellCol = Some("centroid_id"))
-    }
-    filterLiveCells(
-      view.select(col("id"), col("centroid_id").cast("long").as("centroid_id"),
-        col("codes")),
+                     k: Int = 8, iters: Int = 2): DataFrame =
+    filterLiveCells(current(spark, sfDir, pqCodesStore),
       ivfCentroidsCurrent(spark, sfDir, k, iters))
-  }
-
-  /** Is a committed artifact (base entry or live head) available for this
-    * (kind, config) WITHOUT triggering a build? The dispatch probe of
-    * [[knnJoinAuto]]. */
-  private def artifactAvailable(spark: SparkSession, kind: String, config: String,
-                                sfDir: String, table: String): Boolean =
-    Files.exists(storeRoot(spark).resolve(s"v$FormatVersion")
-      .resolve(entryName(kind, sfDir, table, config)).resolve("_SUCCESS")) ||
-      liveHead(spark, kind, config, sfDir, table).isDefined
 
   /** [[knnJoinAuto]]'s outcome: which join ran (pinned by spec per
     * regime) and its result. */
@@ -1606,10 +1521,9 @@ object Materialized {
                   kIvf: Int = 8, iters: Int = 2,
                   baseView: Boolean = false): KnnJoinChoice = {
     import graft.llm.Similarity
-    val cfg = s"k${kIvf}_i$iters"
     val qCount = queries.count()
-    val hasIvf = artifactAvailable(spark, "ivf_index", cfg, sfDir, "embeddings")
-    val hasPq = artifactAvailable(spark, "pq_codes", "m8_k16_i2_res", sfDir, "embeddings")
+    val hasIvf = artifactAvailable(spark, sfDir, ivfIndexStore(kIvf, iters))
+    val hasPq = artifactAvailable(spark, sfDir, pqCodesStore)
     if (!hasIvf && qCount <= heapBound) {
       require(qIdCol != "embedding", "knnJoinAuto: query id column shadows the corpus vector column")
       val q = queries.select(col(qIdCol), col(vecCol).as("embedding"))
@@ -1641,6 +1555,59 @@ object Materialized {
     }
   }
 
+
+  /** The shared preamble of [[retrainIvfIndex]] and [[splitIvfCells]]:
+    * ensure the trained base entries exist, then run `body(baseFp)` under
+    * the centroid head lock — the lock [[appendIvfIndex]] takes, with the
+    * same centroid → index/codes lock order, so the writers cannot
+    * deadlock. */
+  private def underCentroidLock[A](spark: SparkSession, sfDir: String,
+                                   k: Int, iters: Int)(body: String => A): A = {
+    ivfIndex(spark, sfDir, k, iters)
+    val baseFp = corpusFingerprint(sfDir, "embeddings")
+    withHeadLock(headFile(spark, sfDir, ivfCentroidsStore(k, iters)))(body(baseFp))
+  }
+
+  /** The batch-id ledger of the store's head for the `baseFp` generation. */
+  private def ledgerOf(spark: SparkSession, sfDir: String, spec: StoreSpec,
+                       baseFp: String): Seq[String] =
+    readHead(headFile(spark, sfDir, spec)).filter(_.baseFp == baseFp)
+      .map(_.absorbed).getOrElse(Nil)
+
+  /** Publish one IVF maintenance generation, crash-atomic at the centroid
+    * head swap. Phase 1: `rows` (index rows assigned to `newCells`) —
+    * and, when a PQ code table exists, their residual codes re-encoded
+    * against the UNCHANGED codebooks — are written and appended to their
+    * heads, invisible because no live centroid references the new cells
+    * yet. Phase 2 (COMMIT): `cents` is written and one atomic
+    * centroid-head replace exposes it everywhere at once, recording
+    * `marker` in the centroid ledger. Entry names derive from `tag`, so a
+    * re-run after a crash between the phases resumes idempotently.
+    * Returns the index entry and the code entry, if any. */
+  private def publishIvfGeneration(spark: SparkSession, sfDir: String, k: Int, iters: Int,
+                                   baseFp: String, tag: String, rows: DataFrame,
+                                   newCells: DataFrame, cents: DataFrame,
+                                   marker: String): (String, Option[String]) = {
+    val index = ivfIndexStore(k, iters)
+    val idxEntry = derivedEntry(index, sfDir, s"$tag:idx")
+    writeEntry(spark, idxEntry, index.partitionCols)(rows)
+    appendToHead(spark, sfDir, index, baseFp, idxEntry)
+    val pqEntry = if (!hasBase(spark, sfDir, pqCodesStore)) None else {
+      val e = derivedEntry(pqCodesStore, sfDir, s"$tag:pq")
+      writeEntry(spark, e, pqCodesStore.partitionCols)(graft.llm.Similarity.pqEncode(
+        graft.llm.Similarity.ivfResiduals(rows, newCells),
+        "id", "rv", pqCodebooks(spark, sfDir), dims = 64, cellCol = Some("centroid_id")))
+      appendToHead(spark, sfDir, pqCodesStore, baseFp, e)
+      Some(e)
+    }
+    val centStore = ivfCentroidsStore(k, iters)
+    val centEntry = derivedEntry(centStore, sfDir, s"$tag:cents")
+    writeEntry(spark, centEntry, centStore.partitionCols)(cents)
+    replaceFile(headFile(spark, sfDir, centStore), renderHead(StoreHead(baseFp,
+      ledgerOf(spark, sfDir, centStore, baseFp) :+ marker, Seq(centEntry))))
+    (idxEntry, pqEntry)
+  }
+
   /**
    * Periodic IVF retrain — the third maintenance operator beside
    * [[appendIvfIndex]] (ingest) and [[splitIvfCells]] (incremental
@@ -1652,17 +1619,18 @@ object Materialized {
    * training set.
    *
    * Crash-atomic by the same single-commit-point construction as the
-   * split: the retrained cells take FRESH centroid ids (past the current
-   * max, so they overlap nothing), the new index entry — and, when a PQ
-   * code table exists, the re-encoded codes against the UNCHANGED
-   * codebooks — is APPENDED to its head first (invisible: no live
-   * centroid references the fresh cells), then one atomic centroid-head
-   * swap retires every old cell and exposes the retrained generation
-   * everywhere at once. Only after the commit are the heads collapsed to
-   * the single new entry (a crash before that leaves extra hidden
-   * entries for the sweeps). The absorbed-batch ledger is preserved
-   * through both steps — a replayed batch id is still a no-op after the
-   * retrain, and the id anti-join keeps protecting against duplicates.
+   * split ([[publishIvfGeneration]]): the retrained cells take FRESH
+   * centroid ids (past the current max, so they overlap nothing), the new
+   * index entry — and, when a PQ code table exists, the re-encoded codes
+   * against the UNCHANGED codebooks — is APPENDED to its head first
+   * (invisible: no live centroid references the fresh cells), then one
+   * atomic centroid-head swap retires every old cell and exposes the
+   * retrained generation everywhere at once. Only after the commit are the
+   * heads collapsed to the single new entry (a crash before that leaves
+   * extra hidden entries for the sweeps). The absorbed-batch ledger is
+   * preserved through both steps — a replayed batch id is still a no-op
+   * after the retrain, and the id anti-join keeps protecting against
+   * duplicates.
    *
    * Training seeds are the k smallest LIVE ids (the base trainer's
    * deterministic `id < k` seeding generalized to a view whose id space
@@ -1672,27 +1640,17 @@ object Materialized {
    * retrain, then split the cells that remain hot.
    */
   def retrainIvfIndex(spark: SparkSession, sfDir: String,
-                      k: Int = 8, iters: Int = 2): IvfIndex = {
-    import spark.implicits._
-    val cfg = s"k${k}_i$iters"
-    val pqCfg = "m8_k16_i2_res"
-    ivfIndex(spark, sfDir, k, iters) // ensure base entries exist
-    val baseFp = corpusFingerprint(sfDir, "embeddings")
-    val pfp = pathFingerprint(sfDir, "embeddings")
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-    val chf = headFile(spark, "ivf_centroids", cfg, sfDir, "embeddings")
-    val ihf = headFile(spark, "ivf_index", cfg, sfDir, "embeddings")
-    val phf = headFile(spark, "pq_codes", pqCfg, sfDir, "embeddings")
-    val pqBaseName = entryName("pq_codes", sfDir, "embeddings", pqCfg)
-    withHeadLock(chf) {
+                      k: Int = 8, iters: Int = 2): IvfIndex =
+    underCentroidLock(spark, sfDir, k, iters) { baseFp =>
+      import spark.implicits._
+      val index = ivfIndexStore(k, iters)
       val curCents = ivfCentroidsCurrent(spark, sfDir, k, iters)
         .select(col("centroid_id").cast("long").as("centroid_id"), col("vec"))
       val maxId = curCents.agg(max("centroid_id")).head().getLong(0)
       val cur = ivfIndexCurrent(spark, sfDir, k, iters).assignment
-      val ledger = readHead(ihf).filter(_.baseFp == baseFp)
-        .map(_.absorbed).getOrElse(Nil)
-      val tag = s"$baseFp:retrain:${md5Hex(ledger.mkString(",")).take(8)}:" +
-        readHead(chf).map(_.absorbed.size).getOrElse(0)
+      val ledger = ledgerOf(spark, sfDir, index, baseFp)
+      val revisions = ledgerOf(spark, sfDir, ivfCentroidsStore(k, iters), baseFp).size
+      val tag = s"$baseFp:retrain:${md5Hex(ledger.mkString(",")).take(8)}:$revisions"
       // k smallest live ids seed the train, labels relocated past maxId so
       // the retrained cells overlap no existing (live or retired) cell id
       val seedIds = cur.select("id").orderBy("id").limit(k)
@@ -1705,53 +1663,23 @@ object Materialized {
         .as[(Long, Seq[Double])].collect().sortBy(_._1).toSeq
       val newCents = trained.toDF("centroid_id", "vec")
       val rows = graft.llm.Similarity.ivfIndexRows(cur, "id", "v", newCents)
-      // phase 1: entries + appended heads — invisible behind the old centroids
-      val idxEntry = s"ivf_index_p${pfp}_${md5Hex(s"$tag:idx").take(16)}_$cfg"
-      writeEntry(spark, idxEntry, rows, Seq("centroid_id"))
-      withHeadLock(ihf) {
-        val h0 = liveHeadAt(spark, "ivf_index", cfg, sfDir, "embeddings", baseFp)
-          .map(_._1).getOrElse(StoreHead(baseFp, Nil,
-            Seq(entryName("ivf_index", sfDir, "embeddings", cfg))))
-        if (!h0.entries.contains(idxEntry))
-          replaceFile(ihf, renderHead(h0.copy(entries = h0.entries :+ idxEntry)))
-      }
-      val pqExists = Files.exists(vdir.resolve(pqBaseName).resolve("_SUCCESS"))
-      val pqEntry = s"pq_codes_p${pfp}_${md5Hex(s"$tag:pq").take(16)}_$pqCfg"
-      if (pqExists) {
-        val codes = graft.llm.Similarity.pqEncode(
-          graft.llm.Similarity.ivfResiduals(rows, newCents),
-          "id", "rv", pqCodebooks(spark, sfDir), dims = 64,
-          cellCol = Some("centroid_id"))
-        writeEntry(spark, pqEntry, codes, Seq("centroid_id"))
-        withHeadLock(phf) {
-          val h0 = liveHeadAt(spark, "pq_codes", pqCfg, sfDir, "embeddings", baseFp)
-            .map(_._1).getOrElse(StoreHead(baseFp, Nil, Seq(pqBaseName)))
-          if (!h0.entries.contains(pqEntry))
-            replaceFile(phf, renderHead(h0.copy(entries = h0.entries :+ pqEntry)))
-        }
-      }
-      // phase 2 — COMMIT: the centroid swap retires every old cell at once
-      val centEntry = s"ivf_centroids_p${pfp}_${md5Hex(s"$tag:cents").take(16)}_$cfg"
-      writeEntry(spark, centEntry, newCents)
-      val ledger0 = readHead(chf).filter(_.baseFp == baseFp)
-        .map(_.absorbed).getOrElse(Nil)
-      replaceFile(chf, renderHead(
-        StoreHead(baseFp, ledger0 :+ s"retrain-${ledger0.size}", Seq(centEntry))))
+      val (idxEntry, pqEntry) = publishIvfGeneration(spark, sfDir, k, iters, baseFp,
+        tag, rows, newCents, newCents, s"retrain-$revisions")
       // phase 3 — collapse the data heads to the single fresh generation
       // (read-amplification cleanup; every old entry is already invisible)
-      withHeadLock(ihf) {
-        replaceFile(ihf, renderHead(StoreHead(baseFp, ledger, Seq(idxEntry))))
+      def collapse(spec: StoreSpec, entry: String): StoreHead = {
+        val hf = headFile(spark, sfDir, spec)
+        withHeadLock(hf) {
+          val h = StoreHead(baseFp, ledgerOf(spark, sfDir, spec, baseFp), Seq(entry))
+          replaceFile(hf, renderHead(h))
+          h
+        }
       }
-      if (pqExists) withHeadLock(phf) {
-        val pl = readHead(phf).filter(_.baseFp == baseFp)
-          .map(_.absorbed).getOrElse(Nil)
-        replaceFile(phf, renderHead(StoreHead(baseFp, pl, Seq(pqEntry))))
-      }
-      sweepUnreferenced(spark, "ivf_index", cfg, sfDir, "embeddings",
-        StoreHead(baseFp, ledger, Seq(idxEntry)))
+      val h = collapse(index, idxEntry)
+      pqEntry.foreach(collapse(pqCodesStore, _))
+      sweepUnreferenced(spark, sfDir, index, h)
       ivfIndexCurrent(spark, sfDir, k, iters)
     }
-  }
 
   /** Run `body` against an ISOLATED copy of the committed store entries
     * whose names start with one of `kindPrefixes` — the sandbox the
@@ -1768,7 +1696,7 @@ object Materialized {
   def withStoreSandbox[A](spark: SparkSession,
                           kindPrefixes: Seq[String])(body: => A): A = {
     import scala.jdk.CollectionConverters._
-    val src = storeRoot(spark).resolve(s"v$FormatVersion")
+    val src = storeDir(spark)
     val tmpRoot = Files.createTempDirectory("graft-sandbox")
     val dst = tmpRoot.resolve(s"v$FormatVersion")
     Files.createDirectories(dst)
@@ -1796,24 +1724,6 @@ object Materialized {
         case None => spark.conf.unset("spark.graft.materialized.dir")
       }
       clearSessionCache()
-    }
-  }
-
-  /** Write a store entry under an explicit name (tmp + atomic publish,
-    * no-op when already committed) — the split path's writer; the keyed
-    * builders go through [[parquetBacked]]. */
-  private def writeEntry(spark: SparkSession, name: String, df: DataFrame,
-                         partitionCols: Seq[String] = Nil): Unit = {
-    val dir = storeRoot(spark).resolve(s"v$FormatVersion").resolve(name)
-    if (!Files.exists(dir.resolve("_SUCCESS"))) {
-      Files.createDirectories(dir.getParent)
-      sweepStaleTmp(dir)
-      val tmp = dir.getParent.resolve(
-        s"${dir.getFileName}.tmp-${java.util.UUID.randomUUID()}")
-      val w = compactOnWrite(df, partitionCols).write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(tmp.toString)
-      publish(tmp, dir)
     }
   }
 
@@ -1856,20 +1766,9 @@ object Materialized {
    */
   def splitIvfCells(spark: SparkSession, sfDir: String,
                     k: Int = 8, iters: Int = 2,
-                    maxShare: Double = 0.30, maxRounds: Int = 8): IvfSplitReport = {
-    import spark.implicits._
-    val cfg = s"k${k}_i$iters"
-    val pqCfg = "m8_k16_i2_res"
-    ivfIndex(spark, sfDir, k, iters) // ensure trained base entries exist
-    val baseFp = corpusFingerprint(sfDir, "embeddings")
-    val pfp = pathFingerprint(sfDir, "embeddings")
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
-    val chf = headFile(spark, "ivf_centroids", cfg, sfDir, "embeddings")
-    val ihf = headFile(spark, "ivf_index", cfg, sfDir, "embeddings")
-    val phf = headFile(spark, "pq_codes", pqCfg, sfDir, "embeddings")
-    val pqBaseName = entryName("pq_codes", sfDir, "embeddings", pqCfg)
-
-    withHeadLock(chf) {
+                    maxShare: Double = 0.30, maxRounds: Int = 8): IvfSplitReport =
+    underCentroidLock(spark, sfDir, k, iters) { baseFp =>
+      import spark.implicits._
       var splits = Vector.empty[Long]
       var stuck = Set.empty[Long]
       var shareBefore = -1.0
@@ -1919,46 +1818,14 @@ object Materialized {
             else {
               val tag = s"$baseFp:split:${(splits :+ hotCell).mkString(",")}"
               val childCents = children.toDF("centroid_id", "vec")
-              val childRows = graft.llm.Similarity.ivfIndexRows(
-                cellRows, "id", "v", childCents)
-              // phase 1a: child index rows — invisible until the head swap
-              // (no live centroid references the child cells yet)
-              val idxDelta = s"ivf_index_p${pfp}_${md5Hex(s"$tag:idx").take(16)}_$cfg"
-              writeEntry(spark, idxDelta, childRows, Seq("centroid_id"))
-              withHeadLock(ihf) {
-                val h0 = liveHeadAt(spark, "ivf_index", cfg, sfDir, "embeddings", baseFp)
-                  .map(_._1).getOrElse(StoreHead(baseFp, Nil,
-                    Seq(entryName("ivf_index", sfDir, "embeddings", cfg))))
-                if (!h0.entries.contains(idxDelta))
-                  replaceFile(ihf, renderHead(h0.copy(entries = h0.entries :+ idxDelta)))
-              }
-              // phase 1b: remap the affected PQ codes, when a code table
-              // exists — residuals vs the CHILD centroids, same codebooks
-              val pqExists = Files.exists(vdir.resolve(pqBaseName).resolve("_SUCCESS"))
-              if (pqExists) {
-                val childCodes = graft.llm.Similarity.pqEncode(
-                  graft.llm.Similarity.ivfResiduals(childRows, childCents),
-                  "id", "rv", pqCodebooks(spark, sfDir), dims = 64,
-                  cellCol = Some("centroid_id"))
-                val pqDelta = s"pq_codes_p${pfp}_${md5Hex(s"$tag:pq").take(16)}_$pqCfg"
-                writeEntry(spark, pqDelta, childCodes, Seq("centroid_id"))
-                withHeadLock(phf) {
-                  val h0 = liveHeadAt(spark, "pq_codes", pqCfg, sfDir, "embeddings", baseFp)
-                    .map(_._1).getOrElse(StoreHead(baseFp, Nil, Seq(pqBaseName)))
-                  if (!h0.entries.contains(pqDelta))
-                    replaceFile(phf, renderHead(h0.copy(entries = h0.entries :+ pqDelta)))
-                }
-              }
-              // phase 2 — COMMIT: one atomic centroid-head swap retires the
-              // parent and exposes the children everywhere at once
+              // the children's rows (and remapped PQ codes: residuals vs
+              // the CHILD centroids, same codebooks) stay invisible until
+              // the centroid swap retires the parent and exposes them
               val revised = (centRows.filterNot(_._1 == hotCell) ++ children)
                 .sortBy(_._1).toSeq
-              val revName = s"ivf_centroids_p${pfp}_${md5Hex(s"$tag:cents").take(16)}_$cfg"
-              writeEntry(spark, revName, revised.toDF("centroid_id", "vec"))
-              val ledger0 = readHead(chf).filter(_.baseFp == baseFp)
-                .map(_.absorbed).getOrElse(Nil)
-              replaceFile(chf, renderHead(
-                StoreHead(baseFp, ledger0 :+ s"split-$hotCell", Seq(revName))))
+              publishIvfGeneration(spark, sfDir, k, iters, baseFp, tag,
+                graft.llm.Similarity.ivfIndexRows(cellRows, "id", "v", childCents),
+                childCents, revised.toDF("centroid_id", "vec"), s"split-$hotCell")
               splits :+= hotCell
               occFresh = false
             }
@@ -1973,7 +1840,6 @@ object Materialized {
       IvfSplitReport(splits, shareBefore, shareAfter,
         ivfIndexCurrent(spark, sfDir, k, iters))
     }
-  }
 
   /** One store entry's operational status: `role` is `head-base` /
     * `head-delta` (position in a valid head's entry list), `headless`
@@ -1995,7 +1861,7 @@ object Materialized {
    * local/shared-FS by construction).
    */
   def storeStatus(spark: SparkSession): Seq[StoreEntryStatus] = {
-    val vdir = storeRoot(spark).resolve(s"v$FormatVersion")
+    val vdir = storeDir(spark)
     if (!Files.isDirectory(vdir)) return Nil
     import scala.jdk.CollectionConverters._
     val all = {
@@ -2071,7 +1937,7 @@ object Materialized {
    * join.
    */
   def embeddingPairStats(spark: SparkSession, sfDir: String): EmbeddingPairStats = {
-    val file = storeRoot(spark).resolve(s"v$FormatVersion").resolve(
+    val file = storeDir(spark).resolve(
       entryName("emb_pair_stats", sfDir, "embeddings", "d64_t030_r3b64") + ".json")
     statsCache.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$file", {
       if (Files.exists(file)) parseStats(Files.readString(file))

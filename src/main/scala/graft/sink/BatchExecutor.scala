@@ -41,7 +41,6 @@ final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends Aut
   private val openSqls = scala.collection.mutable.ArrayBuffer[String]()
   private val pending = scala.collection.mutable.Map[String, Int]()
   private val windowKeys = scala.collection.mutable.HashSet[Seq[Any]]()
-  private var lastSql: String = null
 
   private def stmt(sql: String): PreparedStatement =
     stmts.getOrElseUpdate(sql, conn.prepareStatement(sql))
@@ -49,32 +48,28 @@ final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends Aut
   /**
    * Queue one row-op (all the statements one logical CDC/ETL row expands
    * to, e.g. DELETE+INSERT) under its PK; auto-commits every `commitBatch`
-   * statements. `key == null` means "unknown key": the op degrades to
-   * strict run-length batching (flush whenever the SQL text changes).
+   * statements.
    */
   def addOp(key: Seq[Any], ops: Seq[(String, Seq[Any])]): Unit = {
-    if (key == null) {
-      // unknown key: only a homogeneous run is provably order-safe
-      if (ops.exists { case (sql, _) => lastSql != null && sql != lastSql }) flush()
-    } else if (!windowKeys.add(key)) {
+    if (!windowKeys.add(key)) {
       flush() // second op for this key → new window keeps per-key order exact
       windowKeys.add(key)
     }
     ops.foreach { case (sql, params) =>
       val ps = stmt(sql)
       if (!pending.contains(sql)) { openSqls += sql; pending(sql) = 0 }
-      params.zipWithIndex.foreach { case (v, i) => ps.setObject(i + 1, v) }
+      params.zipWithIndex.foreach {
+        // Spark hands TIMESTAMP_NTZ values over as LocalDateTime, which
+        // drivers such as Derby reject; bind the same wall-clock Timestamp
+        case (v: java.time.LocalDateTime, i) => ps.setObject(i + 1, java.sql.Timestamp.valueOf(v))
+        case (v, i) => ps.setObject(i + 1, v)
+      }
       ps.addBatch()
       pending(sql) += 1
-      lastSql = sql
       sinceCommit += 1
     }
     if (sinceCommit >= commitBatch) commit()
   }
-
-  /** Queue one parameterized statement with no key context (run-length
-    * batching only). */
-  def execute(sql: String, params: Seq[Any]): Unit = addOp(null, Seq(sql -> params))
 
   /** Execute an unparameterized DDL/utility statement immediately (a hard
     * ordering barrier: the open window flushes first). */
@@ -87,7 +82,6 @@ final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends Aut
   private def flush(): Unit = {
     openSqls.foreach(sql => stmts(sql).executeBatch())
     openSqls.clear(); pending.clear(); windowKeys.clear()
-    lastSql = null
   }
 
   def commit(): Unit = { flush(); sinceCommit = 0; conn.commit() }
@@ -95,7 +89,7 @@ final class BatchExecutor(conn: Connection, commitBatch: Int = 5000) extends Aut
   def rollback(): Unit = {
     stmts.values.foreach(_.clearBatch())
     openSqls.clear(); pending.clear(); windowKeys.clear()
-    lastSql = null; sinceCommit = 0
+    sinceCommit = 0
     conn.rollback()
   }
 

@@ -16,8 +16,10 @@ trait SqlDialect extends Serializable {
              pkValues: Seq[Any]): Seq[(String, Seq[Any])]
   def delete(mapping: DbMapping, pkValues: Seq[Any]): Seq[(String, Seq[Any])]
   def truncate(mapping: DbMapping): String
-  def quote(id: String, escapeUpper: Boolean): String
-  def tableName(mapping: DbMapping): String
+  /** Identifiers and table names are escaped the Phoenix way in every
+    * dialect (double-quoted, upper-cased unless the mapping opts out). */
+  def quote(id: String, escapeUpper: Boolean): String = PhoenixDialect.escape(id, escapeUpper)
+  def tableName(mapping: DbMapping): String = PhoenixDialect.tableName(mapping)
 }
 
 /** Phoenix-style: native UPSERT, double-quoted upper-cased identifiers. */
@@ -28,8 +30,6 @@ object PhoenixSqlDialect extends SqlDialect {
   def delete(m: DbMapping, pkValues: Seq[Any]): Seq[(String, Seq[Any])] =
     Seq(PhoenixDialect.deleteSql(m) -> pkValues)
   def truncate(m: DbMapping): String = PhoenixDialect.truncateSql(m)
-  def quote(id: String, escapeUpper: Boolean): String = PhoenixDialect.escape(id, escapeUpper)
-  def tableName(m: DbMapping): String = PhoenixDialect.tableName(m)
 }
 
 /**
@@ -46,9 +46,6 @@ object PhoenixSqlDialect extends SqlDialect {
  * pk-changes arrive as DELETE+INSERT upstream, `CdcApply.expandPkChanges`).
  */
 final case class MergeDialect(dummyTable: String = "SYSIBM.SYSDUMMY1") extends SqlDialect {
-  def quote(id: String, escapeUpper: Boolean): String =
-    PhoenixDialect.escape(id, escapeUpper)
-  def tableName(m: DbMapping): String = PhoenixDialect.tableName(m)
   def upsert(m: DbMapping, cols: Seq[String], values: Seq[Any],
              pkValues: Seq[Any]): Seq[(String, Seq[Any])] = {
     val pkCols = m.targetPk.keys.toSeq.sorted // same order as pkValues (sink contract)
@@ -70,9 +67,6 @@ final case class MergeDialect(dummyTable: String = "SYSIBM.SYSDUMMY1") extends S
 
 /** Generic JDBC (no native upsert): DELETE-by-PK + INSERT, idempotent. */
 object DeleteInsertDialect extends SqlDialect {
-  def quote(id: String, escapeUpper: Boolean): String =
-    PhoenixDialect.escape(id, escapeUpper)
-  def tableName(m: DbMapping): String = PhoenixDialect.tableName(m)
   def upsert(m: DbMapping, cols: Seq[String], values: Seq[Any],
              pkValues: Seq[Any]): Seq[(String, Seq[Any])] = {
     val colList = cols.map(quote(_, m.escapeUpper)).mkString(", ")

@@ -43,6 +43,17 @@ object UpsertSink {
     false
   }
 
+  /** Positions of the mapping's target PK columns, in the sink's sorted
+    * pkValues order, within `cols` — case-insensitive and fail-fast: a -1
+    * would otherwise crash opaquely inside `foreachPartition` (or, offset
+    * past a leading op column, silently read the op as the key). */
+  def pkIndices(mapping: DbMapping, cols: Seq[String]): Seq[Int] =
+    mapping.targetPk.keys.toSeq.sorted.map { p =>
+      val i = cols.indexWhere(_.equalsIgnoreCase(p))
+      require(i >= 0, s"target PK column '$p' not found in columns (${cols.mkString(", ")})")
+      i
+    }
+
   /**
    * Apply a partition of ordered ops. Exposed separately so semantics are
    * unit-testable against any JDBC-ish target.
@@ -91,14 +102,7 @@ object UpsertSink {
                    dialect: SqlDialect = PhoenixSqlDialect,
                    debug: Boolean = false): Long = {
     val cols = df.columns.toSeq
-    // case-insensitive, fail-fast: consistent with applyBatchToJdbc's lookup;
-    // a -1 here would otherwise crash opaquely inside foreachPartition
-    val pkIdx = mapping.targetPk.keys.toSeq.sorted.map { p =>
-      val i = cols.indexWhere(_.equalsIgnoreCase(p))
-      require(i >= 0, s"target PK column '$p' not found in DataFrame columns " +
-        s"(${cols.mkString(", ")})")
-      i
-    }
+    val pkIdx = pkIndices(mapping, cols)
     val applied = df.sparkSession.sparkContext.longAccumulator("graft.upserts.applied")
     val routed = if (numPartitions > 0) df.repartition(numPartitions) else df
     routed.foreachPartition { (rows: Iterator[Row]) =>

@@ -331,14 +331,7 @@ object CanalStream {
     }
     val projected = ordered.select(Seq(col("type")) ++ decoded: _*)
     val names = fields.map(_.name)
-    val pkTargetCols = m.targetPk.keys.toSeq.sorted
-    val pkIdx = pkTargetCols.map { p =>
-      val i = names.indexWhere(_.equalsIgnoreCase(p))
-      // -1 + 1 = 0 would silently read the op column as the PK value
-      require(i >= 0, s"target PK column '$p' missing from probed target schema " +
-        s"(${names.mkString(", ")})")
-      i + 1
-    }
+    val pkIdx = UpsertSink.pkIndices(m, names).map(_ + 1) // past the op column
     val mapping = m
     projected.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       val ops = rows.map { r =>

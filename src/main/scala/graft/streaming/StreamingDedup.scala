@@ -116,7 +116,8 @@ object StreamingDedup {
     import org.apache.spark.sql.functions.col
     val kept = judgedBatch.where(col("keep"))
       .select(col("docId").as("id"), col("contentHash").as("h"))
-    graft.queries.Materialized.absorbContentHashes(spark, sfDir, kept,
+    import graft.queries.Materialized
+    Materialized.absorb(spark, sfDir, Materialized.contentHashesStore, kept,
       s"$streamId-$microBatchId")
     judgedBatch
   }

@@ -235,7 +235,8 @@ object StreamingEmbDedup {
     val keptVecs = bandVerdicts.where(col("carry") && col("vec").isNotNull)
       .select(col("docId"), col("vec"))
       .join(v.where(col("keep")).select("docId"), Seq("docId"), "left_semi")
-    graft.queries.Materialized.absorbEmbeddingSignatures(spark, sfDir,
+    import graft.queries.Materialized
+    Materialized.absorb(spark, sfDir, Materialized.embSigsStore,
       Similarity.lshSigRowsTyped(keptVecs, "docId", "vec",
         bands = 128, planesPerBand = 16, dims = 64),
       s"$streamId-$microBatchId")

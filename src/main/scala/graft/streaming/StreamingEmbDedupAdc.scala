@@ -207,12 +207,12 @@ object StreamingEmbDedupAdc {
    * axis-sign word + densified sketch, the store's `d64_b1_k128` config)
    * into ALL the stored search artifacts:
    * [[graft.queries.Materialized.hammingSigs]] (flat),
-   * [[graft.queries.Materialized.absorbHammingSigsIvf]] (cell-
-   * partitioned raw sketches, keepers assigned to their IVF cell at
-   * absorb time), [[graft.queries.Materialized.absorbHammingSigsIvfRes]]
-   * (cell-partitioned RESIDUAL sketches),
-   * [[graft.queries.Materialized.absorbQ8Codes]] (flat int8 rerank
-   * codes) and [[graft.queries.Materialized.absorbQ8CodesIvf]]
+   * [[graft.queries.Materialized.hammingSigsIvf]] (cell-partitioned raw
+   * sketches, keepers assigned to their IVF cell at absorb time by
+   * [[graft.queries.Materialized.baseCells]]),
+   * [[graft.queries.Materialized.hammingSigsIvfRes]] (cell-partitioned
+   * RESIDUAL sketches), [[graft.queries.Materialized.q8Codes]] (flat int8
+   * rerank codes) and [[graft.queries.Materialized.q8CodesIvf]]
    * (cell-partitioned int8 codes, assigned at absorb time) — so batch
    * `FromSigs` searches, both hybrid searches, the flat SQ search AND
    * the fully-composed search see the same corpus after the micro-batch; no
@@ -237,17 +237,20 @@ object StreamingEmbDedupAdc {
     val keptVecs = bandVerdicts.where(col("carry") && col("vec").isNotNull)
       .select(col("docId"), col("vec"))
       .join(v.where(col("keep")).select("docId"), Seq("docId"), "left_semi")
-    graft.queries.Materialized.absorbHammingSigs(spark, sfDir,
-      Similarity.hammingSigRows(keptVecs, "docId", "vec", dims = 64),
-      s"$streamId-$microBatchId")
-    graft.queries.Materialized.absorbHammingSigsIvf(spark, sfDir,
-      keptVecs, "docId", "vec", s"$streamId-$microBatchId")
-    graft.queries.Materialized.absorbHammingSigsIvfRes(spark, sfDir,
-      keptVecs, "docId", "vec", s"$streamId-$microBatchId")
-    graft.queries.Materialized.absorbQ8Codes(spark, sfDir,
-      keptVecs, "docId", "vec", s"$streamId-$microBatchId")
-    graft.queries.Materialized.absorbQ8CodesIvf(spark, sfDir,
-      keptVecs, "docId", "vec", s"$streamId-$microBatchId")
+    import graft.queries.Materialized
+    val batch = s"$streamId-$microBatchId"
+    val sigs = Similarity.hammingSigRows(keptVecs, "docId", "vec", dims = 64)
+    val codes = Similarity.q8CodeRows(keptVecs, "docId", "vec")
+    val cells = Materialized.baseCells(spark, sfDir, keptVecs, "docId", "vec")
+    Materialized.absorb(spark, sfDir, Materialized.hammingSigsStore, sigs, batch)
+    Materialized.absorb(spark, sfDir, Materialized.hammingSigsIvfStore,
+      sigs.join(cells, "id"), batch)
+    Materialized.absorb(spark, sfDir, Materialized.hammingSigsIvfResStore,
+      Similarity.hammingResidualSigRows(keptVecs, "docId", "vec",
+        Materialized.ivfIndex(spark, sfDir).centroids, dims = 64), batch)
+    Materialized.absorb(spark, sfDir, Materialized.q8CodesStore, codes, batch)
+    Materialized.absorb(spark, sfDir, Materialized.q8CodesIvfStore,
+      codes.join(cells, "id"), batch)
     v
   }
 

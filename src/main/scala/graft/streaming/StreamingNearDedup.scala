@@ -285,7 +285,8 @@ object StreamingNearDedup {
     // different queries feeding the same store both start at micro-batch 0,
     // and without the caller-chosen streamId the second stream's early
     // batches would silently no-op against the first's ledger entries
-    graft.queries.Materialized.absorbMinhashSignatures(spark, sfDir,
+    import graft.queries.Materialized
+    Materialized.absorb(spark, sfDir, Materialized.minhashSigsStore,
       graft.llm.Dedup.minhashSignatureTable(keptDocs, "docId", "text"),
       s"$streamId-$microBatchId")
     v

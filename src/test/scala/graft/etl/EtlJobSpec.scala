@@ -53,6 +53,33 @@ class EtlJobSpec extends AnyFunSuite {
     assert(targetCount("\"TPCH2\".\"CUSTOMER\"") == expected)
   }
 
+  test("importOne: a TIMESTAMP_NTZ column lands in a Derby TIMESTAMP column at its wall-clock value") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("etl-ntz")
+    val t1 = java.time.LocalDateTime.of(2024, 3, 1, 12, 34, 56, 789000000)
+    val t2 = java.time.LocalDateTime.of(1999, 12, 31, 23, 59, 59)
+    Seq((1L, t1), (2L, t2)).toDF("id", "o_ts").write.parquet(s"$dir/ntz.parquet")
+    assert(spark.read.parquet(s"$dir/ntz.parquet").schema("o_ts").dataType ==
+      org.apache.spark.sql.types.TimestampNTZType)
+
+    val c = conn()
+    c.createStatement().execute(
+      """CREATE TABLE "TPCH2"."NTZ" ("ID" BIGINT PRIMARY KEY, "O_TS" TIMESTAMP)""")
+    c.close()
+    val cfg = MappingConfig(dataSourceKey = "ds", destination = "example",
+      dbMapping = DbMapping("tpch", "ntz", "TPCH2.NTZ", targetPk = Map("id" -> "id"),
+        mapAll = true, etlCondition = "id < {0}"))
+    val r = EtlJob.importOne(spark, cfg, s"$dir/ntz.parquet", Seq("10"),
+      DerbyConn.factory(url), dialect = DeleteInsertDialect)
+    assert(r.succeeded && r.importedCount == 2, r.errorMessage)
+
+    val rs = conn().createStatement()
+      .executeQuery("""SELECT "ID", "O_TS" FROM "TPCH2"."NTZ" ORDER BY "ID"""")
+    val got = Iterator.continually(rs).takeWhile(_.next())
+      .map(x => (x.getLong(1), x.getTimestamp(2).toLocalDateTime)).toList
+    assert(got == List((1L, t1), (2L, t2)))
+  }
+
   test("importSource: partitioned JDBC source read → Derby target (S2/P1 over real JDBC)") {
     // seed a Derby *source* table from the corpus — the reference's MySQL side
     val srcUrl = "jdbc:derby:memory:etlsrc;create=true"

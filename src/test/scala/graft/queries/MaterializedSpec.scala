@@ -261,8 +261,8 @@ class MaterializedSpec extends AnyFunSuite {
         .toDF("doc_id", "text")
       val sigs = Dedup.minhashSignatureTable(batch, "doc_id", "text")
       val a0 = Materialized.absorbsPublished.get()
-      val absorbed = Materialized.absorbMinhashSignatures(
-        spark, TestSpark.sf, sigs, "batch-1")
+      val absorbed = Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore,
+        sigs, "batch-1")
       assert(Materialized.absorbsPublished.get() == a0 + 1)
       assert(Materialized.buildsStarted.get() == b0 + 1, "absorb must not re-sign the corpus")
       assert(absorbed.count() == nBase + 2)
@@ -278,8 +278,8 @@ class MaterializedSpec extends AnyFunSuite {
       assert(Materialized.buildsStarted.get() == b0 + 1)
 
       // exactly-once: re-absorbing the same batch id publishes nothing
-      val replay = Materialized.absorbMinhashSignatures(
-        spark, TestSpark.sf, sigs, "batch-1")
+      val replay = Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore,
+        sigs, "batch-1")
       assert(Materialized.absorbsPublished.get() == a0 + 1, "replay must be a no-op")
       assert(replay.count() == nBase + 2)
 
@@ -287,7 +287,8 @@ class MaterializedSpec extends AnyFunSuite {
       val sigs2 = Dedup.minhashSignatureTable(
         Seq((9003L, "a third batch brings one more novel doc into the store"))
           .toDF("doc_id", "text"), "doc_id", "text")
-      val v2 = Materialized.absorbMinhashSignatures(spark, TestSpark.sf, sigs2, "batch-2")
+      val v2 = Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore,
+        sigs2, "batch-2")
       assert(v2.count() == nBase + 3)
       assert(Materialized.buildsStarted.get() == b0 + 1, "corpus still signed exactly once")
     }
@@ -308,12 +309,12 @@ class MaterializedSpec extends AnyFunSuite {
         Materialized.contentHashes(spark, TestSpark.sf), "doc_id", "text",
         expectedCorpusItems = 100000L)
       assert(day1.where(col("keep")).count() == 1)
-      Materialized.absorbContentHashes(spark, TestSpark.sf, hashesOf(b1), "d1")
+      Materialized.absorb(spark, TestSpark.sf, Materialized.contentHashesStore, hashesOf(b1), "d1")
       // view grew by one; corpus hashed exactly once; replay is a no-op
       Materialized.clearSessionCache()
       assert(Materialized.contentHashes(spark, TestSpark.sf).count() == nBase + 1)
       assert(Materialized.buildsStarted.get() == b0 + 1)
-      Materialized.absorbContentHashes(spark, TestSpark.sf, hashesOf(b1), "d1")
+      Materialized.absorb(spark, TestSpark.sf, Materialized.contentHashesStore, hashesOf(b1), "d1")
       assert(Materialized.contentHashes(spark, TestSpark.sf).count() == nBase + 1)
       // day 2: an exact copy of the absorbed B1 keep classifies as already
       // ingested THROUGH the head view — sketch and confirm, no corpus text
@@ -326,29 +327,78 @@ class MaterializedSpec extends AnyFunSuite {
     }
   }
 
-  test("content-hash absorb chain compacts to one live entry, ledger preserved, view intact after gc") {
-    withTempStore { _ =>
-      import spark.implicits._
-      def hashesOf(rows: Seq[(Long, String)]) = rows.toDF("doc_id", "text")
-        .select(col("doc_id").as("id"), Dedup.contentHashSafe(col("text")).as("h"))
-      val nBase = Materialized.contentHashes(spark, TestSpark.sf).count()
-      Materialized.absorbContentHashes(spark, TestSpark.sf,
-        hashesOf(Seq((9001L, "novel compact one"))), "c1")
-      Materialized.absorbContentHashes(spark, TestSpark.sf,
-        hashesOf(Seq((9002L, "novel compact two"))), "c2")
-      val compacted = Materialized.compactContentHashes(spark, TestSpark.sf)
-      assert(compacted.count() == nBase + 2)
-      // ledger survives the compaction: replayed batch ids stay exactly-once
-      Materialized.clearSessionCache()
-      Materialized.absorbContentHashes(spark, TestSpark.sf,
-        hashesOf(Seq((9001L, "novel compact one"))), "c1")
-      assert(Materialized.contentHashes(spark, TestSpark.sf).count() == nBase + 2)
-      // superseded base+deltas age out; the compacted view keeps serving
-      Materialized.gc(spark, olderThanMs = 0)
-      Materialized.clearSessionCache()
-      val after = Materialized.contentHashes(spark, TestSpark.sf)
-      assert(after.count() == nBase + 2)
-      assert(after.where(col("id").isin(9001L, 9002L)).count() == 2)
+  test("every absorb-able store compacts: view unchanged, ledger kept, one live entry after gc, entry names pinned") {
+    import graft.llm.Similarity
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    val sf = TestSpark.sf
+    def docs(ids: Seq[Long]) =
+      ids.map(i => (i, s"novel compact doc $i alpha ${i * 7} beta ${i * 13}")).toDF("doc_id", "text")
+    def vecs(ids: Seq[Long]) =
+      ids.map(i => (i, Seq.tabulate(64)(d => math.sin(0.37 * i + 1.3 * d)))).toDF("vec_id", "embedding")
+    def cells(v: DataFrame) = Materialized.baseCells(spark, sf, v, "vec_id", "embedding")
+    def cents = Materialized.ivfIndex(spark, sf).centroids
+    // (store, kind, config, table, batch rows for ids) — kind and config are
+    // the on-disk name components stores have always been written under: a
+    // change here orphans every built store
+    val stores: Seq[(Materialized.StoreSpec, String, String, String, Seq[Long] => DataFrame)] = Seq(
+      (Materialized.minhashSigsStore, "minhash_sigs", "n3_k128", "documents",
+        ids => Dedup.minhashSignatureTable(docs(ids), "doc_id", "text")),
+      (Materialized.contentHashesStore, "content_hashes", "md5", "documents",
+        ids => docs(ids).select(col("doc_id").as("id"), Dedup.contentHashSafe(col("text")).as("h"))),
+      (Materialized.embSigsStore, "emb_sigs", "d64_r16b128", "embeddings",
+        ids => Similarity.lshSigRowsTyped(vecs(ids), "vec_id", "embedding",
+          bands = 128, planesPerBand = 16, dims = 64)),
+      (Materialized.hammingSigsStore, "hamming_sigs", "d64_b1_k128", "embeddings",
+        ids => Similarity.hammingSigRows(vecs(ids), "vec_id", "embedding", dims = 64)),
+      (Materialized.q8CodesStore, "q8_codes", "d64_s127", "embeddings",
+        ids => Similarity.q8CodeRows(vecs(ids), "vec_id", "embedding")),
+      (Materialized.hammingSigsIvfStore, "hamming_sigs_ivf", "d64_k128_cell", "embeddings",
+        ids => Similarity.hammingSigRows(vecs(ids), "vec_id", "embedding", dims = 64)
+          .join(cells(vecs(ids)), "id")),
+      (Materialized.hammingSigsIvfResStore, "hamming_sigs_ivfres", "d64_k128_rescell", "embeddings",
+        ids => Similarity.hammingResidualSigRows(vecs(ids), "vec_id", "embedding", cents, dims = 64)),
+      (Materialized.q8CodesIvfStore, "q8_codes_ivf", "d64_s127_cell", "embeddings",
+        ids => Similarity.q8CodeRows(vecs(ids), "vec_id", "embedding").join(cells(vecs(ids)), "id")),
+      (Materialized.ivfIndexStore(8, 2), "ivf_index", "k8_i2", "embeddings",
+        ids => Similarity.ivfIndexRows(vecs(ids), "vec_id", "embedding", cents)))
+    def md5(x: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    def content(df: DataFrame) = df.toJSON.collect().toSet
+    withTempStore { root =>
+      spark.conf.set("spark.graft.materialized.gc.ageMs", "0")
+      try stores.foreach { case (spec, kind, config, table, rowsOf) =>
+        assert((spec.kind, spec.config, spec.table) == ((kind, config, table)))
+        def entries = Materialized.storeStatus(spark)
+          .filter(e => e.kind == kind && e.config == config)
+        val ids0 = Materialized.compact(spark, sf, spec).select("id").distinct().count()
+        val base = entries.map(_.name)
+        val pfp = md5(java.nio.file.Paths.get(sf, s"$table.parquet").toAbsolutePath.toString).take(8)
+        assert(base.size == 1 && base.head.matches(s"${kind}_p${pfp}_[0-9a-f]{16}_$config"), base)
+        val cfp = base.head.stripPrefix(s"${kind}_p${pfp}_").take(16)
+        def named(seed: String) = s"${kind}_p${pfp}_${md5(seed).take(16)}_$config"
+
+        Materialized.absorb(spark, sf, spec, rowsOf(Seq(9001L)), "c1")
+        val before = content(Materialized.absorb(spark, sf, spec, rowsOf(Seq(9002L)), "c2"))
+        assert(Files.exists(root.resolve(s"v${Materialized.FormatVersion}")
+          .resolve(s"${kind}_p${pfp}_head_$config.json")), kind)
+        assert(entries.map(_.name).toSet ==
+          Set(base.head, named(s"$cfp:c1"), named(s"$cfp:c1,c2")), kind)
+
+        val compacted = Materialized.compact(spark, sf, spec)
+        assert(content(compacted) == before, s"$kind: compaction must not change the view")
+        assert(compacted.select("id").distinct().count() == ids0 + 2, kind)
+        // the ledger survives: a replayed batch id publishes nothing
+        val a0 = Materialized.absorbsPublished.get()
+        Materialized.absorb(spark, sf, spec, rowsOf(Seq(9001L)), "c1")
+        assert(Materialized.absorbsPublished.get() == a0, s"$kind: replay must be a no-op")
+        // superseded base + deltas age out; the compacted entry serves alone
+        Materialized.gc(spark, olderThanMs = 0)
+        Materialized.clearSessionCache()
+        assert(entries.map(e => (e.name, e.role)) ==
+          Seq((named(s"$cfp:compact:c1,c2"), "head-base")), kind)
+        assert(content(Materialized.compact(spark, sf, spec)) == before, kind)
+      } finally spark.conf.unset("spark.graft.materialized.gc.ageMs")
     }
   }
 
@@ -366,7 +416,7 @@ class MaterializedSpec extends AnyFunSuite {
       val day1 = Dedup.dedupIncrementalNear(b1,
         Materialized.minhashSignatures(spark, sfDir), corpus, "doc_id", "text")
       assert(day1.where(col("keep")).count() == 1, "novel B1 doc must be kept")
-      Materialized.absorbMinhashSignatures(spark, sfDir,
+      Materialized.absorb(spark, sfDir, Materialized.minhashSigsStore,
         Dedup.minhashSignatureTable(b1, "doc_id", "text"), "day1")
 
       // day 2: a near-copy of the B1 keep (last word dropped) arrives —
@@ -393,7 +443,7 @@ class MaterializedSpec extends AnyFunSuite {
         writeCorpus(corpusDir, "gen1")
         val sfDir = corpusDir.toString
         Materialized.minhashSignatures(spark, sfDir).count()
-        Materialized.absorbMinhashSignatures(spark, sfDir,
+        Materialized.absorb(spark, sfDir, Materialized.minhashSigsStore,
           Dedup.minhashSignatureTable(
             Seq((500L, "an absorbed doc that dies with its corpus generation"))
               .toDF("doc_id", "text"), "doc_id", "text"), "b1")
@@ -429,13 +479,13 @@ class MaterializedSpec extends AnyFunSuite {
       // every later head read) — the ledger alone records the batch
       val a0 = Materialized.absorbsPublished.get()
       val dup = sigsOf(Seq((0L, "id collides with a stored row")))
-      assert(Materialized.absorbMinhashSignatures(spark, TestSpark.sf, dup, "noop-1")
+      assert(Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore, dup, "noop-1")
         .count() == n0)
       assert(Materialized.absorbsPublished.get() == a0, "no delta for a zero-novel batch")
       Materialized.clearSessionCache()
       assert(Materialized.minhashSignatures(spark, TestSpark.sf).count() == n0,
         "head view must stay readable after a ledger-only absorb")
-      Materialized.absorbMinhashSignatures(spark, TestSpark.sf, dup, "noop-1")
+      Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore, dup, "noop-1")
       assert(Materialized.absorbsPublished.get() == a0, "ledger-only batch replays as no-op")
 
       // destroy an absorbed delta: the broken head degrades to the base
@@ -443,7 +493,7 @@ class MaterializedSpec extends AnyFunSuite {
       // (the ledger must not swallow the recovery)
       val before = sigDirs(root).toSet
       val novel = sigsOf(Seq((9100L, "novel doc for the loss recovery test words")))
-      Materialized.absorbMinhashSignatures(spark, TestSpark.sf, novel, "lost-1")
+      Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore, novel, "lost-1")
       assert(Materialized.minhashSignatures(spark, TestSpark.sf).count() == n0 + 1)
       val deltaDir = (sigDirs(root).toSet -- before).head
       val v = root.resolve(s"v${Materialized.FormatVersion}")
@@ -453,7 +503,7 @@ class MaterializedSpec extends AnyFunSuite {
       assert(Materialized.minhashSignatures(spark, TestSpark.sf).count() == n0,
         "a lost delta must degrade reads to the surviving entries")
       val a1 = Materialized.absorbsPublished.get()
-      Materialized.absorbMinhashSignatures(spark, TestSpark.sf, novel, "lost-1")
+      Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore, novel, "lost-1")
       assert(Materialized.absorbsPublished.get() == a1 + 1,
         "the broken head must re-open the lost batch id for recovery")
       assert(Materialized.minhashSignatures(spark, TestSpark.sf).count() == n0 + 1)
@@ -469,15 +519,15 @@ class MaterializedSpec extends AnyFunSuite {
         Materialized.minhashSignatures(spark, TestSpark.sf).count()
         def sigsOf(rows: Seq[(Long, String)]) = Dedup.minhashSignatureTable(
           rows.toDF("doc_id", "text"), "doc_id", "text")
-        Materialized.absorbMinhashSignatures(spark, TestSpark.sf,
+        Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore,
           sigsOf(Seq((9001L, "first absorbed batch novel doc with its words"))), "c-b1")
-        Materialized.absorbMinhashSignatures(spark, TestSpark.sf,
+        Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore,
           sigsOf(Seq((9002L, "second absorbed batch novel doc other words"))), "c-b2")
         val before = Materialized.minhashSignatures(spark, TestSpark.sf)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(sigDirs(root).size == 3) // base + 2 deltas
 
-        val compacted = Materialized.compactMinhashSignatures(spark, TestSpark.sf)
+        val compacted = Materialized.compact(spark, TestSpark.sf, Materialized.minhashSigsStore)
         assert(compacted.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == before,
           "compaction must not change the view's content")
         assert(sigDirs(root).size == 1, s"superseded chain must be swept: ${sigDirs(root)}")
@@ -485,7 +535,7 @@ class MaterializedSpec extends AnyFunSuite {
 
         // ledger preserved: absorbed batch ids replay as no-ops
         val a0 = Materialized.absorbsPublished.get()
-        Materialized.absorbMinhashSignatures(spark, TestSpark.sf,
+        Materialized.absorb(spark, TestSpark.sf, Materialized.minhashSigsStore,
           sigsOf(Seq((9001L, "first absorbed batch novel doc with its words"))), "c-b1")
         assert(Materialized.absorbsPublished.get() == a0,
           "compaction must preserve the exactly-once ledger")
@@ -494,7 +544,7 @@ class MaterializedSpec extends AnyFunSuite {
         Materialized.clearSessionCache()
         assert(Materialized.minhashSignatures(spark, TestSpark.sf)
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == before)
-        Materialized.compactMinhashSignatures(spark, TestSpark.sf)
+        Materialized.compact(spark, TestSpark.sf, Materialized.minhashSigsStore)
         assert(sigDirs(root).size == 1)
         assert(Materialized.buildsStarted.get() == b0 + 1)
       } finally spark.conf.unset("spark.graft.materialized.gc.ageMs")
@@ -517,7 +567,7 @@ class MaterializedSpec extends AnyFunSuite {
         val kept = graft.llm.Similarity.hammingSigRows(
           Seq((9001L, vNew)).toDF("vec_id", "embedding"),
           "vec_id", "embedding", dims = 64)
-        Materialized.absorbHammingSigs(spark, TestSpark.sf, kept, "h-b1")
+        Materialized.absorb(spark, TestSpark.sf, Materialized.hammingSigsStore, kept, "h-b1")
         val view = Materialized.hammingSigs(spark, TestSpark.sf)
         assert(view.count() == n0 + 1)
         // the absorbed row's codes are the kernel's, bit for bit
@@ -527,13 +577,13 @@ class MaterializedSpec extends AnyFunSuite {
         assert(got._2 == elo && got._3 == ehi)
         // exactly-once: batch id replays as a no-op
         val a0 = Materialized.absorbsPublished.get()
-        Materialized.absorbHammingSigs(spark, TestSpark.sf, kept, "h-b1")
+        Materialized.absorb(spark, TestSpark.sf, Materialized.hammingSigsStore, kept, "h-b1")
         assert(Materialized.absorbsPublished.get() == a0)
         // compaction: chain → one entry, content identical
         assert(hamDirs.size == 2) // base + 1 delta
         val before = view.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-        val compacted = Materialized.compactHammingSigs(spark, TestSpark.sf)
+        val compacted = Materialized.compact(spark, TestSpark.sf, Materialized.hammingSigsStore)
         assert(compacted.collect().map(r =>
           (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet == before,
           "compaction must not change the view's content")
@@ -559,8 +609,8 @@ class MaterializedSpec extends AnyFunSuite {
           "sig and code stores must cover the same ids")
         val vNew = Array.tabulate(64)(i => math.sin(7.0 * i + 0.3)).toSeq
         val kept = Seq((9001L, vNew)).toDF("vec_id", "embedding")
-        Materialized.absorbQ8Codes(spark, TestSpark.sf, kept,
-          "vec_id", "embedding", "q8-b1")
+        Materialized.absorb(spark, TestSpark.sf, Materialized.q8CodesStore,
+          graft.llm.Similarity.q8CodeRows(kept, "vec_id", "embedding"), "q8-b1")
         val view = Materialized.q8Codes(spark, TestSpark.sf)
         assert(view.count() == n0 + 1)
         // the absorbed row's codes are the quantizer's, byte for byte
@@ -573,14 +623,14 @@ class MaterializedSpec extends AnyFunSuite {
         assert(got == exp, s"absorbed codes must replay quantizeInt8")
         // exactly-once: batch id replays as a no-op
         val a0 = Materialized.absorbsPublished.get()
-        Materialized.absorbQ8Codes(spark, TestSpark.sf, kept,
-          "vec_id", "embedding", "q8-b1")
+        Materialized.absorb(spark, TestSpark.sf, Materialized.q8CodesStore,
+          graft.llm.Similarity.q8CodeRows(kept, "vec_id", "embedding"), "q8-b1")
         assert(Materialized.absorbsPublished.get() == a0)
         // compaction: chain → one entry, content identical
         assert(q8Dirs.size == 2) // base + 1 delta
         val before = view.select("id", "q").collect()
           .map(r => (r.getLong(0), r.getSeq[Byte](1))).toSet
-        val compacted = Materialized.compactQ8Codes(spark, TestSpark.sf)
+        val compacted = Materialized.compact(spark, TestSpark.sf, Materialized.q8CodesStore)
         assert(compacted.select("id", "q").collect()
           .map(r => (r.getLong(0), r.getSeq[Byte](1))).toSet == before,
           "compaction must not change the view's content")
@@ -603,14 +653,16 @@ class MaterializedSpec extends AnyFunSuite {
         val n0 = Materialized.q8CodesIvf(spark, TestSpark.sf).count()
         val vNew = Array.tabulate(64)(i => math.cos(3.0 * i + 0.7)).toSeq
         val kept = Seq((9101L, vNew)).toDF("vec_id", "embedding")
-        Materialized.absorbQ8CodesIvf(spark, TestSpark.sf, kept,
-          "vec_id", "embedding", "q8i-b1")
+        Materialized.absorb(spark, TestSpark.sf, Materialized.q8CodesIvfStore,
+          graft.llm.Similarity.q8CodeRows(kept, "vec_id", "embedding").join(
+            Materialized.baseCells(spark, TestSpark.sf, kept, "vec_id", "embedding"), "id"),
+          "q8i-b1")
         val view = Materialized.q8CodesIvf(spark, TestSpark.sf)
         assert(view.count() == n0 + 1)
         val before = view.select("id", "centroid_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         assert(entries("q8_codes_ivf_").size == 2) // base + 1 delta
-        val compacted = Materialized.compactQ8CodesIvf(spark, TestSpark.sf)
+        val compacted = Materialized.compact(spark, TestSpark.sf, Materialized.q8CodesIvfStore)
         assert(compacted.select("id", "centroid_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet == before,
           "compaction must not change the view's content")
@@ -627,14 +679,16 @@ class MaterializedSpec extends AnyFunSuite {
         // exactly-once survives the fold: the absorbed batch id replays
         // as a no-op against the compacted head
         val a0 = Materialized.absorbsPublished.get()
-        Materialized.absorbQ8CodesIvf(spark, TestSpark.sf, kept,
-          "vec_id", "embedding", "q8i-b1")
+        Materialized.absorb(spark, TestSpark.sf, Materialized.q8CodesIvfStore,
+          graft.llm.Similarity.q8CodeRows(kept, "vec_id", "embedding").join(
+            Materialized.baseCells(spark, TestSpark.sf, kept, "vec_id", "embedding"), "id"),
+          "q8i-b1")
         assert(Materialized.absorbsPublished.get() == a0,
           "compaction must preserve the exactly-once ledger")
         // the sig-store twins fold the same way (content-identical)
         val sigBefore = Materialized.hammingSigsIvfRes(spark, TestSpark.sf)
           .select("id").as[Long].collect().toSet
-        Materialized.compactHammingSigsIvfRes(spark, TestSpark.sf)
+        Materialized.compact(spark, TestSpark.sf, Materialized.hammingSigsIvfResStore)
         assert(Materialized.hammingSigsIvfRes(spark, TestSpark.sf)
           .select("id").as[Long].collect().toSet == sigBefore)
       } finally spark.conf.unset("spark.graft.materialized.gc.ageMs")
@@ -871,7 +925,8 @@ class MaterializedSpec extends AnyFunSuite {
 
       // compaction folds base ∪ split delta into ONE entry; the live-cell
       // filter keeps hiding the copied retired-parent rows
-      val compacted = Materialized.compactIvfIndex(spark, sfDir)
+      Materialized.compact(spark, sfDir, Materialized.ivfIndexStore(8, 2))
+      val compacted = Materialized.ivfIndexCurrent(spark, sfDir)
       assert(compacted.assignment.count() == n &&
         compacted.assignment.select("id").distinct().count() == n)
       val roles = Materialized.storeStatus(spark).filter(_.kind == "ivf_index")
@@ -945,7 +1000,7 @@ class MaterializedSpec extends AnyFunSuite {
         // a headless entry (plain pair table) and an absorb-able chain
         Materialized.minhashPairs(spark, sfDir).count()
         Materialized.minhashSignatures(spark, sfDir).count()
-        Materialized.absorbMinhashSignatures(spark, sfDir,
+        Materialized.absorb(spark, sfDir, Materialized.minhashSigsStore,
           Dedup.minhashSignatureTable(
             Seq((500L, "a novel absorbed document with several words"))
               .toDF("doc_id", "text"), "doc_id", "text"), "s1")
@@ -993,7 +1048,7 @@ class MaterializedSpec extends AnyFunSuite {
           pool.submit(new java.util.concurrent.Callable[Unit] {
             def call(): Unit = {
               gate.await()
-              Materialized.absorbMinhashSignatures(spark, sfDir, b, bid); ()
+              Materialized.absorb(spark, sfDir, Materialized.minhashSigsStore, b, bid); ()
             }
           })
         }
@@ -1017,8 +1072,7 @@ class MaterializedSpec extends AnyFunSuite {
       writeCorpus(corpusDir, "status2")
       val sfDir = corpusDir.toString
       Materialized.minhashSignatures(spark, sfDir).count()
-      Materialized.absorbMinhashSignatures(spark, sfDir,
-        Dedup.minhashSignatureTable(
+      Materialized.absorb(spark, sfDir, Materialized.minhashSigsStore, Dedup.minhashSignatureTable(
           Seq((800L, "a freshly absorbed novel doc with words"))
             .toDF("doc_id", "text"), "doc_id", "text"), "st-1")
       val v = root.resolve(s"v${Materialized.FormatVersion}")

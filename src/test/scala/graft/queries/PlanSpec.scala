@@ -418,12 +418,32 @@ class PlanSpec extends AnyFunSuite {
       "the rule gate must stay per-row\n" + p)
   }
 
-  test("dedup_bloom: sketch probe is a codegen predicate; confirm join is a broadcast semi-join") {
+  test("dedup_bloom: a local batch folds the sketch probe, a distributed batch probes per row; confirm is a broadcast semi-join") {
+    import org.apache.spark.sql.functions._
+    import graft.llm.Dedup
+    // the registry batch is within MaxBroadcastBatchRows, so it is pulled
+    // into a local relation and Catalyst evaluates the sketch filter while
+    // planning: the candidates are a filtered one-column LocalTableScan
     val p = plan("dedup_bloom")
-    assert(p.contains("might_contain"),
-      "batch rows must probe the Bloom sketch per row\n" + p)
+    assert(!p.contains("might_contain") && "LocalTableScan \\[h#\\d+\\]".r.findFirstIn(p).isDefined,
+      "local batch candidates must be the planner-filtered hash relation\n" + p)
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftSemi"),
       "exact confirm must broadcast the candidate set into the hash view\n" + p)
+    // one row past the bound keeps the batch distributed: the probe is a
+    // per-row predicate directly over the batch scan
+    val n = Dedup.MaxBroadcastBatchRows + 1
+    val big = spark.range(n)
+      .select(col("id").as("doc_id"), concat(lit("doc "), col("id").cast("string")).as("text"))
+    val hashes = Tables.documents(spark, sf).select(Dedup.contentHashSafe(col("text")).as("h"))
+    val pd = Dedup.dedupIncrementalBloomFromHashes(big, hashes, "doc_id", "text",
+      expectedCorpusItems = 100000L).queryExecution.executedPlan.toString
+    val lines = pd.linesIterator.toSeq
+    assert(lines.sliding(2).exists {
+      case Seq(f, scan) => f.contains("Filter might_contain") && scan.contains(s"Range (0, $n")
+      case _ => false
+    }, "batch rows must probe the Bloom sketch per row\n" + pd)
+    assert(pd.contains("BroadcastHashJoin") && pd.contains("LeftSemi"),
+      "exact confirm must broadcast the candidate set into the hash view\n" + pd)
   }
 
   test("semantic dedup: within-cell pair scan is an equi-join on the cell key, never a corpus nested loop") {
